@@ -1,8 +1,9 @@
 package graft.functions
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.types._
 import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
@@ -93,18 +94,28 @@ case class HilbertEncode(
 
 /**
  * Binary GEOMETRY predicate with per-side prepared-geometry caches.
- * Mirrors the reference's prepared-geometry constant fast path
- * (geos/geos_executor.hpp:22-70: prepare once when one side is a
- * constant vector) — but on BOTH operands: the anchor side is whichever
- * operand is foldable (a folded Literal returns the same array instance
- * each eval, so the identity cache hits), and asymmetric predicates use
- * their inverse form when the constant is on the "wrong" side
- * (contains ↔ within, covers ↔ coveredBy). With neither side constant
- * (join residuals) no PreparedGeometry is ever built — plain JTS ops on
- * the two parsed geometries, so nothing is prepared per row.
+ * Mirrors the reference's prepared-geometry fast path
+ * (geos/geos_executor.hpp:22-70: prepare a geometry once, probe it many
+ * times):
+ *
+ *  - ANCHOR_R / ANCHOR_L: one operand is foldable (a filter against a
+ *    constant). A folded Literal returns the same array instance on
+ *    every row, interpreted or codegen'd, so a one-slot identity cache
+ *    prepares it once. Asymmetric predicates use their inverse form
+ *    when the constant is on the "wrong" side (contains ↔ within,
+ *    covers ↔ coveredBy).
+ *  - PLAIN: neither operand is foldable (a spatial join's residual).
+ *    The right operand, the build side the grid join probes, repeats
+ *    across candidate pairs, so a per-task [[PlainRightCache]] parses
+ *    each distinct right geometry once and prepares it on its second
+ *    sighting.
+ *
+ * Not a CodegenFallback: `doGenCode` calls back into this instance, so
+ * the operator hosting the predicate (a grid join's hash join, a
+ * Filter) stays inside whole-stage codegen with its other conditions.
  */
 case class GeoPredicate(name: String, left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression {
 
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = true
@@ -139,6 +150,23 @@ case class GeoPredicate(name: String, left: Expression, right: Expression)
       rRef = bytes
     }
     rPrep
+  }
+
+  // PLAIN mode's build-side cache: opened by the first non-point right
+  // operand a task sees, released by that task's completion listener.
+  // Driver-side evaluation (constant folding, local relations) has no
+  // task to release it and runs uncached.
+  @transient private var plainRight: PlainRightCache = _
+
+  private def rightCache(): PlainRightCache = {
+    val tc = TaskContext.get()
+    if (tc == null) return null
+    var c = plainRight
+    if (c == null || (c.task ne tc)) {
+      c = PlainRightCache.open(tc)
+      plainRight = c
+    }
+    c
   }
 
   // zero-allocation fast path for the hottest shape: a plain 2-D point
@@ -180,71 +208,52 @@ case class GeoPredicate(name: String, left: Expression, right: Expression)
   // method on PreparedGeometry).
   private final val ContainsProperlyPattern = "T**FF*FF*"
 
-  // PLAIN-mode right-side value cache: in a spatial join's residual
-  // predicate neither operand is foldable, but the dim side's bytes
-  // REPEAT heavily (25 zones across 10M candidate rows in the bench
-  // grid join) — without reuse every row re-parses the right WKB and
-  // runs an unprepared JTS op (~70% of spatial_join_10m's time over
-  // the scan floor, measured r16). A tiny per-thread map keyed by
-  // VALUE parses each distinct right geometry once and promotes it to
-  // a PreparedGeometry on its second sighting (one-shot rows never pay
-  // the prepare). Bounded: at most 32 entries of at most 64 KiB WKB
-  // each per thread; bigger geometries fall through to the plain path.
-  // Cost accounting (ADVICE r16): 21-byte point right operands BYPASS
-  // the cache entirely in nullSafeEval (the zero-allocation scratch
-  // decode beats any caching — a point has nothing worth preparing),
-  // and each slot keeps a cheap sampled hash so a non-repeating
-  // non-point right side pays at most 32 int compares per row before
-  // the one Arrays.equals of an actual hash hit.
-  private final class PrepSlot {
-    var bytes: Array[Byte] = _
-    var hash: Int = 0
-    var geom: Geometry = _
-    var prep: PreparedGeometry = _
+  /** `name(l, p)` with the right operand prepared: the inverse form. */
+  private def preparedRight(l: Geometry, p: PreparedGeometry): Boolean = name match {
+    case "st_intersects" => p.intersects(l)
+    case "st_contains" => p.within(l)
+    case "st_containsproperly" => l.relate(p.getGeometry, ContainsProperlyPattern)
+    case "st_within" => p.contains(l)
+    case "st_covers" => p.coveredBy(l)
+    case "st_coveredby" => p.covers(l)
+    case "st_crosses" => p.crosses(l)
+    case "st_disjoint" => p.disjoint(l)
+    case "st_equals" => p.getGeometry.equalsTopo(l)
+    case "st_overlaps" => p.overlaps(l)
+    case "st_touches" => p.touches(l)
+    case other => sys.error(s"unknown predicate $other")
   }
-  private final class PlainRightCache {
-    private val slots = new Array[PrepSlot](32)
-    private var clock = 0
-    /** Sampled content hash: length plus eight spread byte probes —
-     *  a prefilter only; collisions fall through to Arrays.equals. */
-    private def keyHash(b: Array[Byte]): Int = {
-      val n = b.length
-      var h = n
-      var i = 0
-      while (i < 8) {
-        h = h * 31 + b(i * (n - 1) / 7)
-        i += 1
-      }
-      h
-    }
-    /** Returns the slot for these bytes (parsed geometry guaranteed,
-     *  prepared from the second sighting on), or null when uncacheable. */
-    def lookup(b: Array[Byte]): PrepSlot = {
-      if (b.length > 65536) return null
-      val h = keyHash(b)
-      var i = 0
-      while (i < slots.length) {
-        val s = slots(i)
-        if (s != null && (s.bytes eq b)) return promote(s)
-        if (s != null && s.hash == h && s.bytes.length == b.length &&
-            java.util.Arrays.equals(s.bytes, b)) return promote(s)
-        i += 1
-      }
-      val s = new PrepSlot
-      s.bytes = b
-      s.hash = h
-      s.geom = Jts.read(b)
-      slots(clock) = s
-      clock = (clock + 1) % slots.length
-      s
-    }
-    private def promote(s: PrepSlot): PrepSlot = {
-      if (s.prep == null) s.prep = PreparedGeometryFactory.prepare(s.geom)
-      s
-    }
+
+  /** `name(p, r)` with the left operand prepared. */
+  private def preparedLeft(p: PreparedGeometry, r: Geometry): Boolean = name match {
+    case "st_intersects" => p.intersects(r)
+    case "st_contains" => p.contains(r)
+    case "st_containsproperly" => p.containsProperly(r)
+    case "st_within" => p.within(r)
+    case "st_covers" => p.covers(r)
+    case "st_coveredby" => p.coveredBy(r)
+    case "st_crosses" => p.crosses(r)
+    case "st_disjoint" => p.disjoint(r)
+    case "st_equals" => p.getGeometry.equalsTopo(r)
+    case "st_overlaps" => p.overlaps(r)
+    case "st_touches" => p.touches(r)
+    case other => sys.error(s"unknown predicate $other")
   }
-  @transient private lazy val plainRight = new ThreadLocal[PlainRightCache] {
-    override def initialValue(): PlainRightCache = new PlainRightCache
+
+  /** `name(l, r)` on two plain geometries. */
+  private def unprepared(l: Geometry, r: Geometry): Boolean = name match {
+    case "st_intersects" => l.intersects(r)
+    case "st_contains" => l.contains(r)
+    case "st_containsproperly" => l.relate(r, ContainsProperlyPattern)
+    case "st_within" => l.within(r)
+    case "st_covers" => l.covers(r)
+    case "st_coveredby" => l.coveredBy(r)
+    case "st_crosses" => l.crosses(r)
+    case "st_disjoint" => l.disjoint(r)
+    case "st_equals" => l.equalsTopo(r)
+    case "st_overlaps" => l.overlaps(r)
+    case "st_touches" => l.touches(r)
+    case other => sys.error(s"unknown predicate $other")
   }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
@@ -260,91 +269,160 @@ case class GeoPredicate(name: String, left: Expression, right: Expression)
       // bbox-only test (reference st_intersects_extent.cpp:17-31)
       return lg.getEnvelopeInternal.intersects(rg.getEnvelopeInternal)
     mode match {
-      case ANCHOR_R =>
-        val p = prepR(rb)
-        name match {
-          case "st_intersects" => p.intersects(lg)
-          case "st_contains" => p.within(lg)
-          case "st_containsproperly" => lg.relate(p.getGeometry, ContainsProperlyPattern)
-          case "st_within" => p.contains(lg)
-          case "st_covers" => p.coveredBy(lg)
-          case "st_coveredby" => p.covers(lg)
-          case "st_crosses" => p.crosses(lg)
-          case "st_disjoint" => p.disjoint(lg)
-          case "st_equals" => p.getGeometry.equalsTopo(lg)
-          case "st_overlaps" => p.overlaps(lg)
-          case "st_touches" => p.touches(lg)
-          case other => sys.error(s"unknown predicate $other")
-        }
-      case ANCHOR_L =>
-        val p = prepL(lb)
-        name match {
-          case "st_intersects" => p.intersects(rg)
-          case "st_contains" => p.contains(rg)
-          case "st_containsproperly" => p.containsProperly(rg)
-          case "st_within" => p.within(rg)
-          case "st_covers" => p.covers(rg)
-          case "st_coveredby" => p.coveredBy(rg)
-          case "st_crosses" => p.crosses(rg)
-          case "st_disjoint" => p.disjoint(rg)
-          case "st_equals" => p.getGeometry.equalsTopo(rg)
-          case "st_overlaps" => p.overlaps(rg)
-          case "st_touches" => p.touches(rg)
-          case other => sys.error(s"unknown predicate $other")
-        }
+      case ANCHOR_R => preparedRight(lg, prepR(rb))
+      case ANCHOR_L => preparedLeft(prepL(lb), rg)
       case _ =>
         // 21-byte 2-D point right operand: zero-allocation scratch
-        // decode, no cache — preparing a point buys nothing and the
-        // r16 cache cost the point-vs-point path its fast path
-        // (ADVICE r16). NaN coordinates fall through to the cache
-        // path so WKBReader's POINT-EMPTY mapping is preserved.
-        val rp0 = asPoint(rb, scratchR)
-        val rPoint =
-          if (rp0 != null && !java.lang.Double.isNaN(rp0.getCoordinate.x) &&
-              !java.lang.Double.isNaN(rp0.getCoordinate.y)) rp0 else null
-        val slot = if (rPoint != null) null else plainRight.get().lookup(rb)
-        if (slot != null && slot.prep != null) {
-          // repeated right geometry: same dispatch as ANCHOR_R
-          val p = slot.prep
-          name match {
-            case "st_intersects" => p.intersects(lg)
-            case "st_contains" => p.within(lg)
-            case "st_containsproperly" => lg.relate(p.getGeometry, ContainsProperlyPattern)
-            case "st_within" => p.contains(lg)
-            case "st_covers" => p.coveredBy(lg)
-            case "st_coveredby" => p.covers(lg)
-            case "st_crosses" => p.crosses(lg)
-            case "st_disjoint" => p.disjoint(lg)
-            case "st_equals" => p.getGeometry.equalsTopo(lg)
-            case "st_overlaps" => p.overlaps(lg)
-            case "st_touches" => p.touches(lg)
-            case other => sys.error(s"unknown predicate $other")
-          }
-        } else {
-          // point bypass, first sighting, or uncacheable: plain JTS
-          // ops; reuse the cached parse when the slot holds one
-          val rgz = if (rPoint != null) rPoint
-            else if (slot != null) slot.geom else rg
-          name match {
-            case "st_intersects" => lg.intersects(rgz)
-            case "st_contains" => lg.contains(rgz)
-            case "st_containsproperly" => lg.relate(rgz, ContainsProperlyPattern)
-            case "st_within" => lg.within(rgz)
-            case "st_covers" => lg.covers(rgz)
-            case "st_coveredby" => lg.coveredBy(rgz)
-            case "st_crosses" => lg.crosses(rgz)
-            case "st_disjoint" => lg.disjoint(rgz)
-            case "st_equals" => lg.equalsTopo(rgz)
-            case "st_overlaps" => lg.overlaps(rgz)
-            case "st_touches" => lg.touches(rgz)
-            case other => sys.error(s"unknown predicate $other")
-          }
-        }
+        // decode, no cache — preparing a point buys nothing. NaN
+        // coordinates fall through to the cache path so
+        // WKBReader's POINT-EMPTY mapping is preserved.
+        val rp = asPoint(rb, scratchR)
+        if (rp != null && !java.lang.Double.isNaN(rp.getCoordinate.x) &&
+            !java.lang.Double.isNaN(rp.getCoordinate.y))
+          return unprepared(lg, rp)
+        val cache = rightCache()
+        val e = if (cache == null) null else cache.lookup(rb)
+        if (e == null) unprepared(lg, Jts.read(rb))
+        else if (e.prep != null) preparedRight(lg, e.prep)
+        else unprepared(lg, e.geom) // first sighting: reuse the parse only
     }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("geoPredicate", this)
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      s"${ev.value} = ((java.lang.Boolean) $self.nullSafeEval($l, $r)).booleanValue();")
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/**
+ * One task's cache of PLAIN-mode [[GeoPredicate]] right operands. In a
+ * grid join's residual neither operand is foldable, but the build
+ * side's geometries repeat across candidate pairs: every point of a
+ * cell is probed against every zone of that cell. Without reuse each
+ * pair re-parses the zone WKB and runs an unprepared JTS relate.
+ *
+ * Keyed by VALUE in a chained hash table: a sampled content hash
+ * (length plus eight spread bytes) picks the bucket and prefilters the
+ * chain, and `Arrays.equals` confirms a hit, since the row's bytes are
+ * a fresh copy on every probe. An entry holds the parsed geometry from
+ * its first sighting and a PreparedGeometry from its second, so
+ * one-shot operands never pay the prepare.
+ *
+ * Bounded by [[PlainRightCache.BudgetBytes]] of WKB: an operand larger
+ * than the budget is never cached, and an entry that would overflow it
+ * flushes the table first. [[PlainRightCache.open]] ties the cache to
+ * its task; the completion listener empties it, so pooled executor
+ * threads and long-lived plans keep nothing alive after the task.
+ */
+private[functions] final class PlainRightCache private (val task: TaskContext) {
+  import PlainRightCache.Entry
+
+  private var table = new Array[Entry](PlainRightCache.InitialBuckets)
+  private var entries = 0
+  private var held = 0L
+  private var released = false
+  /** Jts.read calls made on a miss, for tests. */
+  private[functions] var parses = 0L
+
+  def size: Int = entries
+  def heldBytes: Long = held
+
+  /** The entry for these bytes (parsed; prepared from the second
+   *  sighting on), or null when they are uncacheable or the task has
+   *  completed. Malformed WKB raises Jts.read's parse error. */
+  def lookup(b: Array[Byte]): Entry = {
+    if (released || b.length > PlainRightCache.BudgetBytes) return null
+    val h = PlainRightCache.keyHash(b)
+    var e = table(PlainRightCache.bucket(h, table.length))
+    while (e != null) {
+      if (e.hash == h && ((e.bytes eq b) || java.util.Arrays.equals(e.bytes, b))) {
+        if (e.prep == null) e.prep = PreparedGeometryFactory.prepare(e.geom)
+        return e
+      }
+      e = e.next
+    }
+    val geom = Jts.read(b)
+    parses += 1
+    if (held + b.length > PlainRightCache.BudgetBytes) clear()
+    if (entries >= table.length - (table.length >> 2)) grow()
+    val i = PlainRightCache.bucket(h, table.length)
+    val added = new Entry(b, h, geom, table(i))
+    table(i) = added
+    entries += 1
+    held += b.length
+    added
+  }
+
+  private def grow(): Unit = {
+    val next = new Array[Entry](table.length * 2)
+    table.foreach { head =>
+      var e = head
+      while (e != null) {
+        val rest = e.next
+        val i = PlainRightCache.bucket(e.hash, next.length)
+        e.next = next(i)
+        next(i) = e
+        e = rest
+      }
+    }
+    table = next
+  }
+
+  private def clear(): Unit = {
+    table = new Array[Entry](PlainRightCache.InitialBuckets)
+    entries = 0
+    held = 0
+  }
+
+  /** Empties the cache for good; later lookups return null. */
+  def release(): Unit = {
+    released = true
+    clear()
+  }
+}
+
+private[functions] object PlainRightCache {
+  /** WKB bytes one task's cache may hold: far above a grid join's
+   *  working set (5,000 eight-vertex zones are 0.8 MB) and small enough
+   *  that four concurrent tasks' prepared indexes stay well inside an
+   *  executor's heap. */
+  final val BudgetBytes = 8L << 20
+
+  private final val InitialBuckets = 64
+
+  final class Entry(
+      val bytes: Array[Byte], val hash: Int, val geom: Geometry, var next: Entry) {
+    var prep: PreparedGeometry = _
+  }
+
+  /** A cache for this task, released when the task completes. */
+  def open(task: TaskContext): PlainRightCache = {
+    val c = new PlainRightCache(task)
+    task.addTaskCompletionListener[Unit](_ => c.release())
+    c
+  }
+
+  /** Sampled content hash: length plus eight spread byte probes — a
+   *  prefilter only; collisions fall through to Arrays.equals. Empty
+   *  input hashes to 0 and is left for Jts.read to reject. */
+  private[functions] def keyHash(b: Array[Byte]): Int = {
+    val n = b.length
+    var h = n
+    if (n > 0) {
+      var i = 0
+      while (i < 8) {
+        h = h * 31 + b(i * (n - 1) / 7)
+        i += 1
+      }
+    }
+    h
+  }
+
+  private def bucket(h: Int, buckets: Int): Int = (h ^ (h >>> 16)) & (buckets - 1)
 }
 
 /**

@@ -26,8 +26,10 @@ import org.apache.spark.sql.functions._
  *   4. cheap bbox-overlap prefilter, then exact JTS predicate
  *
  * Steps 1-3 are pure Spark built-ins (sequence/explode/floor) → whole
- * stage codegen; only the final predicate is a CodegenFallback
- * expression evaluated on surviving candidate pairs.
+ * stage codegen. The exact predicate is a codegen'd call into
+ * GeoPredicate, so the equi-join and all its conditions stay in one
+ * generated stage; GeoPredicate parses and prepares each distinct
+ * right-side geometry once per task (its build-side cache).
  *
  * At 100 TB scale: cell size controls the shuffle key cardinality and
  * skew. Too small → row explosion on large geometries; too big → hot

@@ -184,14 +184,20 @@ object GeoTableLog {
    *  benign outcome of a RACING RETIRER (a repairRoot preamble retiring
    *  a just-committed rewrite's files while the rewriter runs its own
    *  retire pass — both move the same src to the same dst; one rename
-   *  wins, the loser must treat the move as done, r16). */
+   *  wins, the loser must treat the move as done, r16). The local
+   *  FileSystem reports that loss by THROWING FileNotFoundException
+   *  (its copy fallback finds the source gone) rather than returning
+   *  false, so both outcomes take the same check. */
   private[sources] def retain(fs: FileSystem, base: String, file: Path): Unit = {
     val dst = new Path(retainedDir(base), file.getName)
     if (fs.exists(dst)) {
       if (!fs.exists(file)) return // a concurrent retirer already moved it
       throw new IllegalStateException(s"retained name collision: ${file.getName}")
     }
-    if (!fs.rename(file, dst)) {
+    val moved =
+      try fs.rename(file, dst)
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!moved) {
       if (fs.exists(dst) && !fs.exists(file)) return // lost the race mid-move
       throw new java.io.IOException(s"cannot retain $file")
     }

@@ -136,6 +136,27 @@ class GeoFunctionsSpec extends SparkSpec {
     }
   }
 
+  test("col-vs-col predicate with an empty right operand raises the WKB parse error") {
+    // the error Jts.read gives for malformed WKB, not an index error from
+    // the build-side cache's hashing of an empty array
+    val expected = intercept[org.locationtech.jts.io.ParseException](
+      graft.functions.Jts.read(Array.emptyByteArray))
+    val poly = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
+    import spark.implicits._
+    val inTasks = spark.range(0, 8, 1, 2).selectExpr(
+      s"ST_GeomFromText(concat('$poly', substr(cast(id AS string), 1, 0))) AS a",
+      "cast(substr(cast(id AS string), 1, 0) AS binary) AS b")
+    val onDriver = Seq((graft.functions.Jts.write(graft.functions.Jts.fromWkt(poly)),
+      Array.emptyByteArray)).toDF("a", "b")
+    for ((where, df) <- Seq("in tasks" -> inTasks, "on the driver" -> onDriver)) {
+      val err = intercept[Throwable](df.selectExpr("ST_Within(a, b)").collect())
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(!chain.exists(_.isInstanceOf[ArrayIndexOutOfBoundsException]), s"$where: $err")
+      assert(chain.exists(c => c.getClass == expected.getClass && c.getMessage == expected.getMessage),
+        s"$where: expected ${expected.getMessage}, got ${chain.mkString(" <- ")}")
+    }
+  }
+
   test("constructive ops") {
     assertSql("ST_Area(ST_Buffer(ST_Point(0, 0), 10)) > 310", true)
     assertSql("ST_AsText(ST_Centroid(ST_MakeEnvelope(0, 0, 2, 2)))", "POINT (1 1)")

@@ -28,6 +28,26 @@ class SpatialJoinSpec extends SparkSpec {
     assert(bcast == brute)
   }
 
+  test("grid join == broadcast join == brute force (200 overlapping octagons, > 32 zones per cell)") {
+    import SpatialJoinSpec._
+    val pts = latticePoints.toDF("pid", "x", "y").withColumn("pt", st_point($"x", $"y")).select("pid", "pt")
+    val zones = octagonZones.toDF("zid", "zone")
+    // the premise: single grid cells hold well over 32 distinct zones
+    val cell = new org.locationtech.jts.geom.Envelope(12.0, 16.0, 12.0, 16.0)
+    val perCell = octagonZones.count { case (_, z) =>
+      graft.functions.Jts.read(z).getEnvelopeInternal.intersects(cell) }
+    assert(perCell > 32, s"only $perCell zones in the centre cell")
+
+    val grid = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within", cellSize = 4.0)
+      .select("pid", "zid").as[(Long, Int)].collect().toSet
+    val bcast = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within", broadcastRight = true)
+      .select("pid", "zid").as[(Long, Int)].collect().toSet
+    val brute = octagonBrute
+    assert(brute.size > 10000)
+    assert(grid == brute, s"grid join mismatch: missing=${(brute -- grid).take(5)} extra=${(grid -- brute).take(5)}")
+    assert(bcast == brute)
+  }
+
   test("grid join polygons x polygons (intersects, multi-cell dedup)") {
     val left = (0 until 30).map(i => (i, i * 1.0, 0.0, i * 1.0 + 5.0, 5.0))
       .toDF("lid", "x0", "y0", "x1", "y1")
@@ -85,6 +105,39 @@ class SpatialJoinSpec extends SparkSpec {
     val brute = a.crossJoin(b).filter(st_dwithin($"ag", $"bg", lit(0.7)))
       .select("aid", "bid").as[(Int, Int)].collect().toSet
     assert(grid == brute)
+  }
+}
+
+object SpatialJoinSpec {
+  import org.locationtech.jts.geom.Coordinate
+  import graft.functions.Jts
+
+  /** 200 octagons, 50 around each of four nearby centres, with radii
+   *  from 1 to 15.7 and rotations that make every one distinct: a cell
+   *  near a centre holds far more than 32 overlapping zones. */
+  val octagonZones: Seq[(Int, Array[Byte])] = (0 until 200).map { k =>
+    val (cx, cy) = Seq((12.0, 12.0), (28.0, 12.0), (12.0, 28.0), (28.0, 28.0))(k % 4)
+    val r = 1.0 + (k / 4) * 0.3
+    val ring = (0 to 8).map { i =>
+      val a = k * 0.05 + (i % 8) * math.Pi / 4
+      new Coordinate(cx + r * math.cos(a), cy + r * math.sin(a))
+    }
+    (k, Jts.write(Jts.gf.createPolygon(ring.toArray)))
+  }
+
+  /** 1,600 points on a 40 x 40 lattice, off the octagons' centres. */
+  val latticePoints: Seq[(Long, Double, Double)] =
+    (0 until 1600).map(i => (i.toLong, i % 40 + 0.37, i / 40 + 0.61))
+
+  /** (pid, zid) of every point inside an octagon, by plain JTS on the
+   *  driver: no Spark, no GeoPredicate, no prepared geometry. */
+  lazy val octagonBrute: Set[(Long, Int)] = {
+    val zones = octagonZones.map { case (z, wkb) => (z, Jts.read(wkb)) }
+    (for {
+      (pid, x, y) <- latticePoints
+      pt = Jts.gf.createPoint(new Coordinate(x, y))
+      (zid, zone) <- zones if zone.contains(pt)
+    } yield (pid, zid)).toSet
   }
 }
 

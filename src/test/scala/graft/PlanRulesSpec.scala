@@ -92,6 +92,83 @@ class PlanRulesSpec extends SparkSpec {
     }
   }
 
+  /** Registers SpatialJoinSpec's lattice points and 200 overlapping
+   *  octagons as `oct_pts(pid, pt)` and `oct_zones(zid, zone)`. */
+  private def octagonViews(): Unit = {
+    import SpatialJoinSpec._
+    latticePoints.toDF("pid", "x", "y").withColumn("pt", st_point($"x", $"y"))
+      .select("pid", "pt").createOrReplaceTempView("oct_pts")
+    octagonZones.toDF("zid", "zone").createOrReplaceTempView("oct_zones")
+  }
+
+  test("SQL spatial join over 200 overlapping octagons (> 32 zones per cell) matches brute force") {
+    import SpatialJoinSpec.octagonBrute
+    octagonViews()
+    withRules {
+      // default settings: the run-time cell-size estimate, as a SQL user gets it
+      assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
+      val df = spark.sql("SELECT pid, zid FROM oct_pts JOIN oct_zones ON ST_Contains(zone, pt)")
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("__lcx"), s"spatial join not rewritten:\n${optimized.take(3000)}")
+      val got = df.as[(Long, Int)].collect().toSet
+      assert(got == octagonBrute,
+        s"missing=${(octagonBrute -- got).take(5)} extra=${(got -- octagonBrute).take(5)}")
+    }
+  }
+
+  test("grid join's equi-join stays inside whole-stage codegen (codegen fallback off)") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import graft.functions.GeoPredicate
+    octagonViews()
+
+    // (join, inside a WholeStageCodegen stage?) for every equi-join whose
+    // condition carries GeoPredicate; a node is codegen'd when the nearest
+    // stage boundary above it is a WholeStageCodegen, not an InputAdapter
+    def geoJoins(plan: SparkPlan): Seq[(SparkPlan, Boolean)] = {
+      def geo(c: Option[org.apache.spark.sql.catalyst.expressions.Expression]): Boolean =
+        c.exists(_.exists(_.isInstanceOf[GeoPredicate]))
+      def walk(p: SparkPlan, inStage: Boolean): Seq[(SparkPlan, Boolean)] = {
+        val here = p match {
+          case j: BroadcastHashJoinExec if geo(j.condition) => Seq(j -> inStage)
+          case j: SortMergeJoinExec if geo(j.condition) => Seq(j -> inStage)
+          case _ => Nil
+        }
+        val kids = p match {
+          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan -> false)
+          case q: QueryStageExec => Seq(q.plan -> false)
+          case r: ReusedExchangeExec => Seq(r.child -> false)
+          case w: WholeStageCodegenExec => Seq(w.child -> true)
+          case i: InputAdapter => Seq(i.child -> false)
+          case other => other.children.map(_ -> inStage)
+        }
+        here ++ kids.flatMap { case (c, s) => walk(c, s) }
+      }
+      walk(plan, inStage = false)
+    }
+
+    // a GeoPredicate whose generated code fails to compile must fail the
+    // query, not run the stage interpreted
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try withRules {
+      val df = spark.sql("SELECT pid, zid FROM oct_pts JOIN oct_zones ON ST_Within(pt, zone)")
+      // collect this Dataset itself, so that its adaptive plan is final
+      assert(df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet == SpatialJoinSpec.octagonBrute)
+      val joins = geoJoins(df.queryExecution.executedPlan)
+      assert(joins.nonEmpty,
+        s"no grid equi-join:\n${df.queryExecution.executedPlan.toString.take(3000)}")
+      assert(joins.forall(_._2),
+        s"grid equi-join outside whole-stage codegen:\n${df.queryExecution.executedPlan.toString.take(4000)}")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("self spatial join (a JOIN a) rewrites and matches brute force") {
     // overlapping envelopes: each box [i, i+3]x[0, 2+i%3] intersects its
     // neighbors — a self join with a non-trivial, non-reflexive result
