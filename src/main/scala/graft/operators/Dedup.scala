@@ -15,6 +15,11 @@ import org.apache.spark.sql.graft.ColumnShim
  */
 object Dedup {
 
+  /** Largest per-task build (MB) for which the MinHash signature
+   *  re-joins are hinted SHUFFLE_HASH: half the ~60 MB non-spillable
+   *  build that ran an 8 GB session out of memory. */
+  private val ShjBuildMaxMb = 32.0
+
   /** Stable 128-bit content key (md5 of exact bytes). */
   def contentKey(text: Column): Column = md5(text.cast("binary"))
 
@@ -284,16 +289,12 @@ object Dedup {
     // self-join would kill these joins where the planner's sort-merge
     // join spills gracefully. The pair frame is materialized anyway
     // (it outlives the signature cache), so the count is free; the
-    // per-task build estimate stays under
-    // spark.graft.minhash.shjBuildMb (default 32 MB — half the ~60 MB
-    // that OOMed the 8g session) or the hints are dropped.
+    // per-task build estimate stays under ShjBuildMaxMb or the hints
+    // are dropped.
     val nCand = pairs.count()
-    val spark = sigs.sparkSession
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val maxMb = spark.conf.getOption("spark.graft.minhash.shjBuildMb")
-      .map(_.toDouble).getOrElse(32.0)
+    val parts = math.max(sigs.sparkSession.sessionState.conf.numShufflePartitions, 1)
     val buildMb = nCand.toDouble / parts * (16 + 4.0 * numHashes + 64) / (1 << 20)
-    def hinted(df: DataFrame) = if (buildMb < maxMb) df.hint("shuffle_hash") else df
+    def hinted(df: DataFrame) = if (buildMb < ShjBuildMaxMb) df.hint("shuffle_hash") else df
     val out = hinted(pairs)
       .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
     val out2 = hinted(out)

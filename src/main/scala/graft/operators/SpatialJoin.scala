@@ -2,7 +2,11 @@ package graft.operators
 
 import graft.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
 
 /**
  * Distributed spatial join.
@@ -33,8 +37,10 @@ import org.apache.spark.sql.functions._
  *
  * At 100 TB scale: cell size controls the shuffle key cardinality and
  * skew. Too small → row explosion on large geometries; too big → hot
- * cells. `estimateCellSize` samples bbox extents and picks ~2× the
- * mean bbox diagonal, the standard heuristic for grid spatial joins.
+ * cells. Unless the caller fixes it, the cell size is ~2× the mean
+ * bbox extent of a sample of each side ([[cellSizeFrame]]), the
+ * standard heuristic for grid spatial joins, read as one uncorrelated
+ * scalar subquery that Spark evaluates once when the join executes.
  */
 object SpatialJoin {
 
@@ -51,14 +57,10 @@ object SpatialJoin {
    *
    * @param predicate one of [[supported]] (default st_intersects);
    *                  st_dwithin uses `distance`
-   * @param cellSize  grid cell edge in coordinate units; <=0 → sample-estimate
-   * @param driverSample with cellSize<=0: true → estimate the cell
-   *                  size eagerly with a driver-side collect over a
-   *                  random sample (explicit-API convenience); false →
-   *                  embed the same estimator as a broadcast 1-row
-   *                  subplan so NO Spark job runs at plan time (the
-   *                  optimizer rule uses this — launching jobs inside
-   *                  logical optimization blocks planning at scale)
+   * @param cellSize  grid cell edge in coordinate units; <=0 → the
+   *                  [[cellSizeFrame]] estimate, embedded as a scalar
+   *                  subquery: building the frame runs no Spark job,
+   *                  and the estimate is computed once per execution
    */
   def join(
       left: DataFrame, right: DataFrame,
@@ -66,8 +68,7 @@ object SpatialJoin {
       predicate: String = "st_intersects",
       cellSize: Double = 0.0,
       distance: Double = 0.0,
-      broadcastRight: Boolean = false,
-      driverSample: Boolean = true): DataFrame = {
+      broadcastRight: Boolean = false): DataFrame = {
     require(supported.contains(predicate), s"unsupported spatial join predicate: $predicate")
 
     val pad = if (predicate == "st_dwithin") distance else 0.0
@@ -84,17 +85,25 @@ object SpatialJoin {
         .drop("__lg", "__lb", "__rg", "__rb")
     }
 
-    // resolve the grid cell size: fixed, driver-estimated, or deferred
-    // to a broadcast scalar computed within the job itself
-    val (attachEstimate, lcs, rcs) =
-      if (cellSize > 0)
-        (false, lit(cellSize), lit(cellSize))
-      else if (driverSample)
-        { val cs = estimateCellSize(left, leftGeom, right, rightGeom); (false, lit(cs), lit(cs)) }
-      else
-        (true, col("__lcs"), col("__rcs"))
+    // a fixed cell size, or one uncorrelated scalar subquery over the
+    // estimator: the same expression (one exprId) feeds both explodes
+    // and the reference-point test, so Spark computes it once, at
+    // execution, and no job runs while the join is planned. The
+    // estimator's relations get fresh attribute ids: sharing the
+    // inputs' ids, its copy of `right` (seen inside the left side's
+    // explode) would make the analyzer's self-join de-duplication
+    // rename the join's right side.
+    val cs =
+      if (cellSize > 0) lit(cellSize)
+      else ColumnShim.column(ScalarSubquery(
+        cellSizeFrame(left, leftGeom, right, rightGeom).queryExecution.optimizedPlan
+          .transformUpWithNewOutput {
+            case r: LogicalPlan with MultiInstanceRelation =>
+              val fresh = r.newInstance()
+              (fresh, r.output.zip(fresh.output))
+          }))
 
-    def withCells(df: DataFrame, geom: Column, prefix: String, padBy: Double, cs: Column): DataFrame = {
+    def withCells(df: DataFrame, geom: Column, prefix: String, padBy: Double): DataFrame = {
       val g = col(s"${prefix}g")
       df.withColumn(s"${prefix}g", geom)
         .withColumn(s"${prefix}b", st_extent(g))
@@ -108,22 +117,9 @@ object SpatialJoin {
             floor((col(s"${prefix}b.max_y") + padBy) / cs).cast("long"))))
     }
 
-    val (leftIn, rightIn) =
-      if (!attachEstimate) (left, right)
-      else {
-        // NOTE: no broadcast() hint here — this path is invoked from
-        // inside the optimizer, after Spark's hint-resolution batch, so
-        // a ResolvedHint node would survive to physical planning and
-        // trip an internal error. The 1-row aggregate is far below
-        // autoBroadcastJoinThreshold and broadcasts on its own.
-        val est = cellSizeFrame(left, leftGeom, right, rightGeom)
-        (left.crossJoin(est.select(col("__cs").as("__lcs"))),
-         right.crossJoin(est.select(col("__cs").as("__rcs"))))
-      }
-
     // pad only one side for dwithin (padding both would double-count)
-    val l = withCells(leftIn, leftGeom, "__l", pad, lcs)
-    val r = withCells(rightIn, rightGeom, "__r", 0.0, rcs)
+    val l = withCells(left, leftGeom, "__l", pad)
+    val r = withCells(right, rightGeom, "__r", 0.0)
 
     val bboxOverlap =
       col("__lb.min_x") <= col("__rb.max_x") + pad && col("__lb.max_x") >= col("__rb.min_x") - pad &&
@@ -134,8 +130,8 @@ object SpatialJoin {
     val refX = greatest(col("__lb.min_x") - pad, col("__rb.min_x"))
     val refY = greatest(col("__lb.min_y") - pad, col("__rb.min_y"))
     val dedup =
-      floor(refX / lcs).cast("long") === col("__lcx") &&
-      floor(refY / lcs).cast("long") === col("__lcy")
+      floor(refX / cs).cast("long") === col("__lcx") &&
+      floor(refY / cs).cast("long") === col("__lcy")
 
     val joined = l.join(r,
       col("__lcx") === col("__rcx") && col("__lcy") === col("__rcy") &&
@@ -143,8 +139,7 @@ object SpatialJoin {
         exact(predicate, col("__lg"), col("__rg"), distance),
       "inner")
 
-    joined.drop("__lg", "__lb", "__lcx", "__lcy", "__rg", "__rb", "__rcx", "__rcy",
-      "__lcs", "__rcs")
+    joined.drop("__lg", "__lb", "__lcx", "__lcy", "__rg", "__rb", "__rcx", "__rcy")
   }
 
   private def exact(predicate: String, lg: Column, rg: Column, distance: Double): Column =
@@ -153,50 +148,35 @@ object SpatialJoin {
       case p => st(p, lg, rg)
     }
 
-  /** Per-side bbox statistics over a seeded random sample (plus the
-   *  first 64 rows so tiny inputs always contribute): mean bbox
-   *  width/height and global span. LocalLimit keeps the scan cheap —
-   *  each task stops after its share of rows. */
-  private def bboxStatsDf(df: DataFrame, g: Column): DataFrame = {
+  /** One side's bbox extents, tagged `s` = `side`, over a seeded random
+   *  sample (plus the first 64 rows so tiny inputs always contribute).
+   *  LocalLimit keeps the scan cheap — each task stops after its share
+   *  of rows. */
+  private def bboxSample(df: DataFrame, g: Column, side: Int): DataFrame = {
     val b = df.select(st_extent(g).as("b"))
     b.sample(withReplacement = false, 0.1, seed = 42).limit(4096)
       .union(b.limit(64))
-      .select(
-        avg(col("b.max_x") - col("b.min_x")).as("w"),
-        avg(col("b.max_y") - col("b.min_y")).as("h"),
-        min(col("b.min_x")).as("x0"), max(col("b.max_x")).as("x1"),
-        min(col("b.min_y")).as("y0"), max(col("b.max_y")).as("y1"))
+      .select(lit(side).as("s"), col("b"))
   }
 
   /** 1-row, 1-column (`__cs`) frame computing the grid-cell estimate:
    *  2× the larger side's mean bbox extent, span/256 for point-like
-   *  inputs, 1.0 as the degenerate fallback. Usable either collected
-   *  (driver path) or cross-joined as a broadcast scalar (plan path). */
+   *  inputs, 1.0 as the degenerate fallback. One aggregate over both
+   *  sides' samples; [[join]] reads it as a scalar subquery. */
   def cellSizeFrame(left: DataFrame, leftGeom: Column, right: DataFrame, rightGeom: Column): DataFrame = {
-    val ls = bboxStatsDf(left, leftGeom)
-    val rs = bboxStatsDf(right, rightGeom).toDF("rw", "rh", "rx0", "rx1", "ry0", "ry1")
-    def me(w: Column, h: Column, x0: Column, x1: Column, y0: Column, y1: Column): Column =
-      when(greatest(w, h) > 0, greatest(w, h))
-        .otherwise(greatest(x1 - x0, y1 - y0) / 256.0)
-    val cell = lit(2.0) * greatest(
-      me(col("w"), col("h"), col("x0"), col("x1"), col("y0"), col("y1")),
-      me(col("rw"), col("rh"), col("rx0"), col("rx1"), col("ry0"), col("ry1")))
-    val raw = coalesce(when(cell > 0, cell), lit(1.0))
-    // Quantize to 2 significant digits: the deferred path embeds this
-    // subplan once per join side, and floor(x/cs) cell ids computed with
-    // cs values differing by an ulp (float-sum merge order, broadcast
-    // reuse off) would silently drop matching pairs. Rounding to ~2
-    // significant digits makes divergence require the raw estimates to
-    // straddle a round() half-way boundary to within a few ulps —
-    // probability ~1e-13 per join, vs certain-adjacent-ulp without it.
-    val step = pow(lit(10.0), floor(log(10.0, raw)) - 1)
-    ls.crossJoin(rs).select((round(raw / step) * step).as("__cs"))
+    def extent(side: Int): Column = {
+      def of(c: Column): Column = when(col("s") === side, c)
+      val edge = greatest(
+        avg(of(col("b.max_x") - col("b.min_x"))), avg(of(col("b.max_y") - col("b.min_y"))))
+      val span = greatest(
+        max(of(col("b.max_x"))) - min(of(col("b.min_x"))),
+        max(of(col("b.max_y"))) - min(of(col("b.min_y"))))
+      when(edge > 0, edge).otherwise(span / 256.0)
+    }
+    val cell = lit(2.0) * greatest(extent(0), extent(1))
+    bboxSample(left, leftGeom, 0).union(bboxSample(right, rightGeom, 1))
+      .agg(coalesce(when(cell > 0, cell), lit(1.0)).as("__cs"))
   }
-
-  /** Driver-side estimate (runs two small jobs; use from the explicit
-   *  API only — the optimizer rule defers to [[cellSizeFrame]]). */
-  def estimateCellSize(left: DataFrame, leftGeom: Column, right: DataFrame, rightGeom: Column): Double =
-    cellSizeFrame(left, leftGeom, right, rightGeom).collect()(0).getDouble(0)
 
   /**
    * Radius-bounded KNN join: for every left row, the `k` nearest right

@@ -135,11 +135,7 @@ case class NativeDispatchRule(spark: SparkSession) extends Rule[LogicalPlan] {
    *  identical isEmpty→NULL semantics, but no JTS materialization and
    *  the expression stays inside whole-stage codegen — these are the
    *  bbox residual of every grid spatial join. */
-  private def rewriteWkb(name: String, c: Expression): Option[Expression] =
-    if (!spark.conf.get("spark.graft.wkbExtentKernel.enabled", "true").toBoolean) None
-    else rewriteWkbImpl(name, c)
-
-  private def rewriteWkbImpl(name: String, c: Expression): Option[Expression] = name match {
+  private def rewriteWkb(name: String, c: Expression): Option[Expression] = name match {
     case "st_xmin" => Some(WkbBound(c, 0))
     case "st_ymin" => Some(WkbBound(c, 1))
     case "st_xmax" => Some(WkbBound(c, 2))

@@ -3,9 +3,9 @@ package graft.plans
 import graft.functions.GeoPredicate
 import graft.operators.SpatialJoin
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graft.ColumnShim
 
@@ -23,9 +23,8 @@ import org.apache.spark.sql.graft.ColumnShim
  * predicate is a cheap residual filter).
  *
  * Config: `spark.graft.spatialJoin.cellSize` (double; unset/<=0 → the
- * cell size is estimated at RUNTIME from a broadcast random-sample
- * subplan — never via a plan-time collect), `spark.graft.spatialJoin
- * .enabled` (default true).
+ * cell size is estimated at run time by one scalar subquery over a
+ * random sample of both sides — never via a plan-time collect).
  */
 case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -38,7 +37,6 @@ case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
     e.references.nonEmpty && e.references.subsetOf(side.outputSet)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.get("spark.graft.spatialJoin.enabled", "true").toBoolean) return plan
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), _)
           if j.resolved && !cond.exists(_.isInstanceOf[SubqueryExpression]) =>
@@ -88,47 +86,27 @@ case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
           val cellSize = spark.conf.get("spark.graft.spatialJoin.cellSize", "0").toDouble
           val leftDf = ColumnShim.ofRows(spark, left)
           val rightDf = ColumnShim.ofRows(spark, right)
-          // driverSample=false: with no configured cell size the
-          // estimator is embedded as a broadcast subplan instead of a
-          // collect() — a Spark job inside logical optimization would
-          // block planning and re-enter the optimizer at scale
+          // with no configured cell size the estimate is a scalar
+          // subquery computed at execution: a Spark job inside logical
+          // optimization would block planning at scale
           val joined = SpatialJoin.join(
             leftDf, rightDf,
             ColumnShim.column(lExpr), ColumnShim.column(rExpr),
             if (pred == "st_containsproperly") "st_intersects" else pred,
-            cellSize = cellSize, distance = dist, driverSample = false)
+            cellSize = cellSize, distance = dist)
           val exactRecheck: Seq[Expression] =
             if (name == "st_containsproperly" || pred == "st_containsproperly") Seq(cs(spatialIdx)) else Nil
           val base = joined.queryExecution.analyzed
-          val remaining = (rest ++ exactRecheck).reduceOption(And)
-          val out = remaining match {
-            case Some(f) => org.apache.spark.sql.catalyst.plans.logical.Filter(remapRefs(f, j, base), base)
+          // the grid join keeps the join's own attributes, so the rest
+          // of the plan and the remaining conjuncts resolve against it
+          require(base.output.map(_.exprId) == j.output.map(_.exprId),
+            s"grid join output ${base.output} != join output ${j.output}")
+          (rest ++ exactRecheck).reduceOption(And) match {
+            case Some(f) => Filter(f, base)
             case None => base
           }
-          // preserve original output attribute ids: alias each (possibly
-          // re-aliased) grid-join output column back to the id the rest
-          // of the plan references
-          val projectList = j.output.zip(base.output).map { case (orig, nb) =>
-            if (nb.exprId == orig.exprId) orig
-            else org.apache.spark.sql.catalyst.expressions.Alias(nb, orig.name)(
-              exprId = orig.exprId, qualifier = orig.qualifier)
-          }
-          org.apache.spark.sql.catalyst.plans.logical.Project(projectList, out)
         }
     }
-  }
-
-  /** The grid join's output is the original join's columns in order
-   *  (left then right, helper columns dropped), but attribute ids may
-   *  have been re-aliased — e.g. the deferred cell-size subplan embeds
-   *  a sample of each side, and Spark's self-join dedup rewrites the
-   *  conflicting ids. Remap positionally (orig output i → base output
-   *  i), falling back to id identity for non-output refs. */
-  private def remapRefs(e: Expression, orig: Join, base: LogicalPlan): Expression = {
-    require(base.output.length == orig.output.length,
-      s"grid join output arity ${base.output.length} != original ${orig.output.length}")
-    val idMap = orig.output.map(_.exprId).zip(base.output).toMap
-    e.transform { case a: Attribute => idMap.getOrElse(a.exprId, a) }
   }
 }
 

@@ -142,7 +142,6 @@ case class SpatialFilterRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!spark.conf.get("spark.graft.spatialFilter.enabled", "true").toBoolean) return plan
     plan.transformUp {
       case f @ Filter(cond, child) if f.resolved =>
         val cs = conjuncts(cond)

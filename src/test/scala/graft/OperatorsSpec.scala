@@ -69,11 +69,17 @@ class SpatialJoinSpec extends SparkSpec {
     val zones = (0 until 6).map(i => (i, i * 8.0, 0.0, i * 8.0 + 9.0, 30.0))
       .toDF("zid", "x0", "y0", "x1", "y1")
       .withColumn("zone", st_makeenvelope($"x0", $"y0", $"x1", $"y1")).select("zid", "zone")
-    val auto = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within") // cellSize <= 0 → estimate
-      .select("pid", "zid").as[(Long, Int)].collect().toSet
+    // cellSize <= 0 → the estimate, as a subquery: building and planning
+    // the join runs no Spark job
+    val (auto, jobs) = jobsDuring {
+      val df = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within").select("pid", "zid")
+      df.queryExecution.executedPlan
+      df
+    }
+    assert(jobs == 0, s"SpatialJoin.join launched $jobs job(s) before an action")
     val brute = pts.crossJoin(zones).filter(st_within($"pt", $"zone"))
       .select("pid", "zid").as[(Long, Int)].collect().toSet
-    assert(auto == brute && brute.nonEmpty)
+    assert(auto.as[(Long, Int)].collect().toSet == brute && brute.nonEmpty)
   }
 
   test("knn join equals brute-force k-nearest within radius (ties on id)") {

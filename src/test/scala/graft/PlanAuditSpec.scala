@@ -43,15 +43,26 @@ class PlanAuditSpec extends SparkSpec {
       "q_doc_dsir")
 
   test("no query plans a cartesian or nested-loop join") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      val physical = df.queryExecution.executedPlan.toString
-      val disallowed = Seq("CartesianProduct") ++
-        (if (intendedBroadcastCross(name)) Nil else Seq("BroadcastNestedLoopJoin"))
-      val bad = disallowed.filter(physical.contains)
-      if (bad.nonEmpty) Some(s"$name: ${bad.mkString(",")}") else None
+    import scala.util.{Failure, Success, Try}
+    // audit every query: one that cannot be built (a missing fixture)
+    // is reported with the offenders instead of hiding the rest
+    val plans = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Try(fn(spark, sfDir).queryExecution.executedPlan.toString)
     }
-    assert(offenders.isEmpty, s"scale-hostile join operators in:\n${offenders.mkString("\n")}")
+    val offenders = plans.flatMap {
+      case (name, Success(physical)) =>
+        val disallowed = Seq("CartesianProduct") ++
+          (if (intendedBroadcastCross(name)) Nil else Seq("BroadcastNestedLoopJoin"))
+        val bad = disallowed.filter(physical.contains)
+        if (bad.nonEmpty) Some(s"$name: ${bad.mkString(",")}") else None
+      case _ => None
+    }
+    val unbuilt = plans.collect { case (name, Failure(e)) =>
+      s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}"
+    }
+    assert(offenders.isEmpty && unbuilt.isEmpty,
+      s"scale-hostile join operators in:\n${offenders.mkString("\n")}\n" +
+        s"queries that could not be built:\n${unbuilt.mkString("\n")}")
   }
 
   test("flagship scans prune columns and push filters") {

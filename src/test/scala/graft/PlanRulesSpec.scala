@@ -54,7 +54,7 @@ class PlanRulesSpec extends SparkSpec {
     }
   }
 
-  test("spatial join rewrite plans without launching a job (deferred cell size)") {
+  test("spatial join rewrite plans without launching a job (cell-size subquery)") {
     val pts = (0 until 200).map(i => (i.toLong, (i % 20) + 0.5, (i / 20) + 0.5))
       .toDF("pid", "x", "y").withColumn("pt", st_point($"x", $"y")).select("pid", "pt")
     val zones = (for (zx <- 0 until 3; zy <- 0 until 3)
@@ -68,28 +68,33 @@ class PlanRulesSpec extends SparkSpec {
 
     withRules {
       assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
-      @volatile var jobs = 0
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      // analysis, optimization (where the rewrite runs) and physical
+      // planning — none of which may launch a Spark job
+      val (df, jobs) = jobsDuring {
         val df = spark.sql("SELECT pid, zid FROM pts_nj JOIN zones_nj ON ST_Within(pt, zone)")
-        // force analysis, optimization (where the rewrite runs), and
-        // physical planning — none of which may launch a Spark job
         df.queryExecution.executedPlan
-        Thread.sleep(500)
-        assert(jobs == 0, s"plan-time launched $jobs job(s)")
-        // the spatial join itself is a hash join on grid cells (the
-        // 1-row cell-size attach may legitimately be a nested loop)
-        val physical = df.queryExecution.executedPlan.toString
-        assert(physical.contains("HashJoin [__lcx") || physical.contains("HashJoin[__lcx"),
-          s"grid equi-join missing:\n${physical.take(3000)}")
-        // execution (which runs the sample-estimate subplan) is exact
-        assert(df.as[(Long, Int)].collect().toSet == brute)
-      } finally spark.sparkContext.removeSparkListener(listener)
+        df
+      }
+      assert(jobs == 0, s"plan-time launched $jobs job(s)")
+      val physical = df.queryExecution.executedPlan.toString
+      assert(physical.contains("HashJoin [__lcx") || physical.contains("HashJoin[__lcx"),
+        s"grid equi-join missing:\n${physical.take(3000)}")
+      assert(!physical.contains("NestedLoopJoin"), s"nested-loop join planned:\n${physical.take(3000)}")
+      // execution (which runs the sample-estimate subquery) is exact
+      assert(df.as[(Long, Int)].collect().toSet == brute)
     }
+  }
+
+  /** (computed, reused) scalar subqueries anywhere in a physical plan,
+   *  adaptive query stages included. */
+  private def subqueries(plan: org.apache.spark.sql.execution.SparkPlan): (Int, Int) = {
+    import org.apache.spark.sql.execution.{ReusedSubqueryExec, SubqueryExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val found = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case _: SubqueryExec => true
+      case _: ReusedSubqueryExec => false
+    }
+    (found.count(identity), found.count(!_))
   }
 
   /** Registers SpatialJoinSpec's lattice points and 200 overlapping
@@ -100,6 +105,22 @@ class PlanRulesSpec extends SparkSpec {
       .select("pid", "pt").createOrReplaceTempView("oct_pts")
     octagonZones.toDF("zid", "zone").createOrReplaceTempView("oct_zones")
   }
+
+  /** The same octagon fixture as parquet tables `pq_pts(pid, geom)` and
+   *  `pq_zones(zid, geom)`: file relations, with one geometry column
+   *  name on both sides, as a user's tables are. */
+  private lazy val octagonParquetViews: Unit = {
+    import SpatialJoinSpec._
+    val dir = java.nio.file.Files.createTempDirectory("octpq").toString
+    latticePoints.toDF("pid", "x", "y").withColumn("geom", st_point($"x", $"y"))
+      .select("pid", "geom").write.parquet(s"$dir/pts")
+    octagonZones.toDF("zid", "geom").write.parquet(s"$dir/zones")
+    spark.read.parquet(s"$dir/pts").createOrReplaceTempView("pq_pts")
+    spark.read.parquet(s"$dir/zones").createOrReplaceTempView("pq_zones")
+  }
+
+  private val octagonParquetJoin =
+    "SELECT p.pid, z.zid FROM pq_pts p JOIN pq_zones z ON ST_Contains(z.geom, p.geom)"
 
   test("SQL spatial join over 200 overlapping octagons (> 32 zones per cell) matches brute force") {
     import SpatialJoinSpec.octagonBrute
@@ -114,6 +135,43 @@ class PlanRulesSpec extends SparkSpec {
       assert(got == octagonBrute,
         s"missing=${(octagonBrute -- got).take(5)} extra=${(got -- octagonBrute).take(5)}")
     }
+  }
+
+  test("SQL grid join computes its cell size in one subquery; every other reference reuses it") {
+    octagonParquetViews
+    withRules {
+      assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
+      val df = spark.sql(octagonParquetJoin)
+      // collect this Dataset itself, so that its adaptive plan is final
+      assert(df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet == SpatialJoinSpec.octagonBrute)
+      val plan = df.queryExecution.executedPlan
+      val (computed, reused) = subqueries(plan)
+      assert(computed == 1 && reused >= 1,
+        s"$computed computed and $reused reused subqueries:\n${plan.toString.take(4000)}")
+    }
+  }
+
+  test("SQL grid join matches brute force with adaptive execution off") {
+    octagonParquetViews
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try withRules {
+      assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
+      val df = spark.sql(octagonParquetJoin)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("__lcx"), s"spatial join not rewritten:\n${plan.toString.take(3000)}")
+      val (computed, reused) = subqueries(plan)
+      assert(computed == 1 && reused >= 1,
+        s"$computed computed and $reused reused subqueries:\n${plan.toString.take(4000)}")
+      val got = df.as[(Long, Int)].collect().toSet
+      assert(got == SpatialJoinSpec.octagonBrute,
+        s"missing=${(SpatialJoinSpec.octagonBrute -- got).take(5)} extra=${(got -- SpatialJoinSpec.octagonBrute).take(5)}")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(spark.conf.getOption(key) == prev)
   }
 
   test("grid join's equi-join stays inside whole-stage codegen (codegen fallback off)") {
@@ -183,6 +241,8 @@ class PlanRulesSpec extends SparkSpec {
     val brute = l.crossJoin(r).filter(st_intersects($"lbox", $"rbox"))
       .select("lid", "rid").as[(Int, Int)].collect().toSet
     assert(brute.size > 40, "fixture should produce cross-row matches")
+    val bruteW = l.crossJoin(r).filter(st_within($"lbox", $"rbox"))
+      .select("lid", "rid").as[(Int, Int)].collect().toSet
 
     withRules {
       spark.conf.set("spark.graft.spatialJoin.cellSize", "3.0")
@@ -197,13 +257,21 @@ class PlanRulesSpec extends SparkSpec {
 
         // asymmetric predicate on a self join (orientation must survive
         // the analyzer's exprId dedup of the two sides)
-        val bruteW = l.crossJoin(r).filter(st_within($"lbox", $"rbox"))
-          .select("lid", "rid").as[(Int, Int)].collect().toSet
         val dfW = spark.sql(
           """SELECT a.bid AS lid, b.bid AS rid
              FROM boxes_self a JOIN boxes_self b ON ST_Within(a.box, b.box)""")
         assert(dfW.as[(Int, Int)].collect().toSet == bruteW)
       } finally spark.conf.unset("spark.graft.spatialJoin.cellSize")
+      // the run-time cell size over a file relation: both sides and the
+      // estimate's samples read the same files
+      val dir = java.nio.file.Files.createTempDirectory("boxes_self").toString
+      boxes.write.parquet(s"$dir/boxes")
+      spark.read.parquet(s"$dir/boxes").createOrReplaceTempView("boxes_self_pq")
+      val dfAuto = spark.sql(
+        """SELECT a.bid AS lid, b.bid AS rid
+           FROM boxes_self_pq a JOIN boxes_self_pq b ON ST_Within(a.box, b.box)""")
+      assert(dfAuto.queryExecution.optimizedPlan.toString.contains("__lcx"))
+      assert(dfAuto.as[(Int, Int)].collect().toSet == bruteW)
     }
   }
 

@@ -22,6 +22,34 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `body`'s result and the number of Spark jobs started while it ran.
+   *  Jobs are counted between the starts of two marker jobs, which the
+   *  listener bus delivers in order, so the count needs no sleep. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.test.jobMarker"
+    val sc = spark.sparkContext
+    val starts = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        starts.put(Option(j.properties).flatMap(p => Option(p.getProperty(key))).getOrElse(""))
+    }
+    def marker(m: String): Unit = {
+      sc.setLocalProperty(key, m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      val out = body
+      marker("end")
+      val delivered = Iterator.continually(
+        Option(starts.poll(60, TimeUnit.SECONDS)).getOrElse(sys.error("marker job start not delivered")))
+      (out, delivered.dropWhile(_ != "start").drop(1).takeWhile(_ != "end").size)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def assertSqlApprox(expr: String, expected: Double, tol: Double): Unit = {
     val got = sql1(expr).asInstanceOf[Double]
     assert(math.abs(got - expected) <= tol, s"$expr -> $got !~ $expected (tol $tol)")
