@@ -41,6 +41,12 @@ object SparkEntry {
   private def q(tables: Seq[String], sql: String): (SparkSession, String) => DataFrame =
     (s, dir) => { load(s, dir, tables: _*); s.sql(sql) }
 
+  /** A committed test fixture, as an absolute path from the working
+   *  directory (sbt runs Verify and the tests from the project root),
+   *  so the oracle SQL that Verify writes out names the same file. */
+  private def fixture(rel: String): String =
+    new java.io.File("src/test/resources", rel).getAbsolutePath
+
   /** Flagship: grid spatial join (points-in-zones) on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_geo_spatial_join")(spark, "/root/testdata/sf0.001")
@@ -3272,20 +3278,20 @@ object SparkEntry {
     // ============== file-source certification (SURVEY §2.6) =============
     // The oracle engine has no spatial/GDAL extension in this
     // environment, so each source row compares our binary parser against
-    // an INDEPENDENT producer of the same data: the .fgb against GDAL's
-    // own GeoJSON export of the same features (read via the oracle's
-    // json reader), the .gpkg against the fixture's closed-form content
-    // spec (tools/make_gpkg_fixture.py — written by python sqlite3, not
-    // by our code), and the .shp against a from-scratch python parse of
-    // the ESRI spec (tools/make_shp_golden.py → committed golden CSV).
+    // an INDEPENDENT producer of the same data: the .fgb and the .gpkg
+    // against their fixtures' closed-form content specs
+    // (tools/make_fgb_fixture.py, written with python struct, and
+    // tools/make_gpkg_fixture.py, written by python sqlite3 — not by our
+    // code), and the .shp against a from-scratch python parse of the
+    // ESRI spec (tools/make_shp_golden.py → committed golden CSV) of the
+    // committed set written by tools/make_shp_fixture.py.
     "q_src_fgb" -> ((s, dir) => {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      // single partition => rows surface in file order, so the first 50
-      // line up with GDAL's amsterdam_roads_50 export of the same file
-      graft.sources.FlatGeobuf.read(s,
-          "/root/reference/test/data/amsterdam_roads.fgb", numPartitions = 1)
+      // single partition => rows surface in file order, so seq is the
+      // storage index the generator's closed form is written in
+      graft.sources.FlatGeobuf.read(s, fixture("fgb/roads.fgb"), numPartitions = 1)
         .withColumn("seq", monotonically_increasing_id())
         .filter(col("seq") < 50)
         .select(col("seq"), col("kind"), st_astext(col("geom")).as("wkt"))
@@ -3307,8 +3313,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      graft.sources.Shapefile.read(s,
-          "/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.shp")
+      graft.sources.Shapefile.read(s, fixture("shp/nyc_zones.shp"))
         .select(col("OBJECTID").as("objectid"), col("Shape_Leng").as("shape_leng"),
           col("Shape_Area").as("shape_area"), col("zone"),
           col("LocationID").as("locationid"), col("borough"),
@@ -3326,11 +3331,11 @@ object SparkEntry {
     "q_src_gdal_opts" -> ((s, dir) => {
       Graft.install(s)
       s.sql(
-        """SELECT OBJECTID AS objectid, zone, borough,
+        s"""SELECT OBJECTID AS objectid, zone, borough,
              st_npoints(geom) AS npoints
-           FROM st_read('/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.shp',
+           FROM st_read('${fixture("shp/nyc_zones.shp")}',
              'allowed_drivers=shapefile;geojson, open_options=ENCODING=ISO-8859-1,
-              sibling_files=taxi_zones.shx;taxi_zones.dbf, sequential_layer_scan=true')
+              sibling_files=nyc_zones.shx;nyc_zones.dbf, sequential_layer_scan=true')
            ORDER BY objectid""")
     }),
 
@@ -3354,28 +3359,17 @@ object SparkEntry {
         .orderBy("name")
     }),
 
-    // zipped st_read (GDAL /vsizip/ parity): the archive is built here
-    // from the reference shapefile's parts (sidecars included) — what's
-    // under test is the zip path (entry select + atomic extraction);
-    // the ORACLE is the same from-scratch python golden as q_src_shp,
-    // i.e. the unzipped copy read by an independent producer
+    // zipped st_read (GDAL /vsizip/ parity): the committed archive holds
+    // the q_src_shp set's four parts (written by python zipfile in
+    // tools/make_shp_fixture.py) — what's under test is the zip path
+    // (entry select + atomic extraction); the ORACLE is the same
+    // from-scratch python golden as q_src_shp, i.e. the unzipped copy
+    // read by an independent producer
     "q_src_zip" -> ((s, dir) => {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      val zip = new java.io.File("/tmp/graft_zip_fixture.zip")
-      if (!zip.isFile) {
-        val src = new java.io.File("/root/reference/test/data/nyc_taxi/taxi_zones")
-        val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(zip))
-        try Seq("taxi_zones.shp", "taxi_zones.shx", "taxi_zones.dbf", "taxi_zones.prj")
-          .foreach { n =>
-            zos.putNextEntry(new java.util.zip.ZipEntry(n))
-            java.nio.file.Files.copy(new java.io.File(src, n).toPath, zos)
-            zos.closeEntry()
-          }
-        finally zos.close()
-      }
-      sources.GeoRead.read(s, zip.getPath + "/taxi_zones.shp")
+      sources.GeoRead.read(s, fixture("shp/nyc_zones.zip") + "/nyc_zones.shp")
         .select(col("OBJECTID").as("objectid"), col("zone"), col("borough"),
           st_npoints(col("geom")).as("npoints"),
           st_xmin(col("geom")).as("xmin"), st_ymax(col("geom")).as("ymax"))
@@ -3969,9 +3963,8 @@ object SparkEntry {
 
     // ST_Read_Meta over all three binary-container fixtures: the layer
     // names / counts / geometry types / CRS codes are independently known
-    // (shp count 263 matches the from-scratch python golden of q_src_shp;
-    // gpkg layers match the fixture generator spec; fgb header values
-    // match GDAL's own export of the same file)
+    // from the generators' specs (tools/make_shp_fixture.py,
+    // make_gpkg_fixture.py, make_fgb_fixture.py)
     "q_read_meta" -> ((s, dir) => {
       load(s, dir, "supplier")
       import org.apache.spark.sql.functions._
@@ -3992,9 +3985,9 @@ object SparkEntry {
          get_json_object(l.geometry_fields[0].crs.projjson, '$$.type') AS pj_type,
          get_json_object(l.geometry_fields[0].crs.projjson, '$$.conversion.method.id.code') AS pj_method
          FROM (
-           SELECT * FROM st_read_meta('/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.shp')
-           UNION ALL SELECT * FROM st_read_meta('/root/repo/src/test/resources/sample.gpkg')
-           UNION ALL SELECT * FROM st_read_meta('/root/reference/test/data/amsterdam_roads.fgb')
+           SELECT * FROM st_read_meta('${fixture("shp/nyc_zones.shp")}')
+           UNION ALL SELECT * FROM st_read_meta('${fixture("sample.gpkg")}')
+           UNION ALL SELECT * FROM st_read_meta('${fixture("fgb/roads.fgb")}')
            UNION ALL SELECT * FROM st_read_meta('$gpq')
          ) m LATERAL VIEW explode(m.layers) t AS l
          ORDER BY drv, layer""")
@@ -8006,19 +7999,19 @@ object SparkEntry {
       },
 
       // file-source certification: the oracle reconstructs the same
-      // features from an INDEPENDENT producer (GDAL geojson export /
-      // closed-form fixture spec / from-scratch python shp parse)
+      // features from an INDEPENDENT producer (closed-form fixture spec /
+      // from-scratch python shp parse). q_src_fgb restates
+      // tools/make_fgb_fixture.py's spec for features 0..49.
       "q_src_fgb" ->
-        """WITH doc AS (SELECT features FROM read_json_auto(
-             '/root/reference/test/data/amsterdam_roads_50.geojson.gz',
-             maximum_object_size=104857600)),
-           feat AS (SELECT i.i AS seq, features[CAST(i.i + 1 AS INT)] AS f
-                    FROM doc, range(50) i(i))
-           SELECT seq, f.properties.kind AS kind,
-             'LINESTRING (' || array_to_string(list_transform(
-               f.geometry.coordinates,
-               c -> c[1]::VARCHAR || ' ' || c[2]::VARCHAR), ', ') || ')' AS wkt
-           FROM feat ORDER BY seq""",
+        """SELECT i AS seq,
+             CASE WHEN i % 11 = 0 THEN NULL
+               ELSE ['motorway', 'primary', 'secondary', 'tertiary', 'residential',
+                     'service'][i % 6 + 1] END AS kind,
+             'LINESTRING (' || array_to_string(list_transform(range(2 + i % 4),
+               j -> CAST(545000.25 + 100 * (i % 8) + 10 * j AS DOUBLE)::VARCHAR || ' ' ||
+                    CAST(6867000.75 + 100 * (i // 8) + 5 * (j % 2) AS DOUBLE)::VARCHAR),
+               ', ') || ')' AS wkt
+           FROM range(50) t(i) ORDER BY seq""",
 
       "q_geo_transform_extended" -> transformExtendedOracle,
 
@@ -8060,9 +8053,9 @@ object SparkEntry {
            ) ORDER BY fid""",
 
       "q_src_shp" ->
-        """SELECT objectid, shape_leng, shape_area, zone, locationid, borough,
+        s"""SELECT objectid, shape_leng, shape_area, zone, locationid, borough,
              npoints, xmin, ymin, xmax, ymax
-           FROM read_csv('/root/repo/src/test/resources/golden/taxi_zones_golden.csv',
+           FROM read_csv('${fixture("golden/nyc_zones_golden.csv")}',
              header=true)
            ORDER BY objectid""",
 
@@ -8070,8 +8063,8 @@ object SparkEntry {
       // engine side (allowed_drivers / open_options / sibling_files /
       // sequential_layer_scan)
       "q_src_gdal_opts" ->
-        """SELECT objectid, zone, borough, npoints
-           FROM read_csv('/root/repo/src/test/resources/golden/taxi_zones_golden.csv',
+        s"""SELECT objectid, zone, borough, npoints
+           FROM read_csv('${fixture("golden/nyc_zones_golden.csv")}',
              header=true)
            ORDER BY objectid""",
 
@@ -8161,8 +8154,8 @@ object SparkEntry {
 
       // same independent golden, zipped read path on the engine side
       "q_src_zip" ->
-        """SELECT objectid, zone, borough, npoints, xmin, ymax
-           FROM read_csv('/root/repo/src/test/resources/golden/taxi_zones_golden.csv',
+        s"""SELECT objectid, zone, borough, npoints, xmin, ymax
+           FROM read_csv('${fixture("golden/nyc_zones_golden.csv")}',
              header=true)
            ORDER BY objectid""",
 
@@ -8251,15 +8244,19 @@ object SparkEntry {
            ) v(kind, id, lat7, lon7, hw, nm, refs_csv, roles, types)
            ORDER BY kind, id""",
 
-      // layer inventories independently known: shp count/fields match the
-      // from-scratch python golden (q_src_shp), gpkg layers match
-      // tools/make_gpkg_fixture.py's spec, fgb header matches GDAL's
-      // export of the same file (q_src_fgb)
+      // layer inventories independently known from the generators'
+      // specs: the shp set is tools/make_shp_fixture.py's 6 zones with
+      // their 6 dbf fields and an EPSG:2263 .prj (Lambert Conic
+      // Conformal 2SP = EPSG method 9802; a .prj carries no authority
+      // code), gpkg layers match tools/make_gpkg_fixture.py, and the fgb
+      // header is tools/make_fgb_fixture.py's (layer 'roads', 64
+      // LineStrings, one 'kind' column, EPSG:3857 = Popular
+      // Visualisation Pseudo Mercator, EPSG method 1024)
       "q_read_meta" ->
         """SELECT drv, layer, CAST(fcount AS BIGINT) AS fcount, gname, gtype,
              crs_auth, crs_code, nfields, pj_type, pj_method
            FROM (VALUES
-             ('flatgeobuf', 'roads', 21648, 'geom', 'LineString', 'EPSG', '3857', 1,
+             ('flatgeobuf', 'roads', 64, 'geom', 'LineString', 'EPSG', '3857', 1,
               'ProjectedCRS', '1024'),
              ('geopackage', 'lines', 10, 'geom', 'LINESTRING', '', '4326', 2,
               'GeographicCRS', CAST(NULL AS VARCHAR)),
@@ -8267,7 +8264,7 @@ object SparkEntry {
               'GeographicCRS', CAST(NULL AS VARCHAR)),
              ('parquet', 'graft_meta_crs', -1, 'geom', 'Unknown', 'EPSG', '2154', 1,
               'ProjectedCRS', '9802'),
-             ('shapefile', 'taxi_zones', 263, 'geom', 'Polygon', '', '', 6,
+             ('shapefile', 'nyc_zones', 6, 'geom', 'Polygon', '', '', 6,
               'ProjectedCRS', '9802')
            ) v(drv, layer, fcount, gname, gtype, crs_auth, crs_code, nfields, pj_type, pj_method)
            ORDER BY drv, layer""",

@@ -22,12 +22,26 @@ class CoverageSpec extends SparkSpec {
     if (new java.io.File(cwd, "COVERAGE.md").exists) cwd.getPath else "/root/repo"
   }
 
-  private def refIndex: Set[String] = {
-    val src = scala.io.Source.fromFile("/root/reference/docs/functions.md")
-    try {
-      val pat = """\| \[`(ST_[A-Za-z0-9_]+)`\]""".r
-      src.getLines().flatMap(l => pat.findAllMatchIn(l).map(_.group(1))).toSet
+  // the reference's function index, pinned as one name a line (its
+  // provenance is in the file's header); where the reference snapshot
+  // itself is present, its docs/functions.md must list the same names
+  private lazy val refIndex: Set[String] = {
+    val src = scala.io.Source.fromFile(
+      new java.io.File(repoRoot, "src/test/resources/reference_functions.txt"))
+    val pinned = try {
+      src.getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSet
     } finally src.close()
+    val liveDoc = new java.io.File("/root/reference/docs/functions.md")
+    if (liveDoc.isFile) {
+      val live = scala.io.Source.fromFile(liveDoc)
+      val index = try {
+        val pat = """\| \[`(ST_[A-Za-z0-9_]+)`\]""".r
+        live.getLines().flatMap(l => pat.findAllMatchIn(l).map(_.group(1))).toSet
+      } finally live.close()
+      assert(index == pinned, s"pinned reference index differs from $liveDoc: " +
+        s"only pinned ${(pinned -- index).toSeq.sorted}, only live ${(index -- pinned).toSeq.sorted}")
+    }
+    pinned
   }
 
   private def coverageRows: Set[String] = {

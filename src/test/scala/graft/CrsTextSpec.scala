@@ -326,17 +326,24 @@ class CrsTextSpec extends AnyFunSuite {
 
   test("st_read_meta emits the derived proj4 for a .prj-bearing source") {
     val spark = graft.Graft.session("local[2]", 2)
-    val meta = graft.sources.GeoRead.readMeta(spark,
-      "/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.shp")
-    val crs = meta.selectExpr("layers[0].geometry_fields[0].crs.proj4 AS p4",
-      "layers[0].geometry_fields[0].crs.wkt AS wkt").collect()(0)
-    val p4 = crs.getString(0)
-    assert(p4.startsWith("+proj=lcc"), s"proj4: $p4")
-    assert(p4.contains("+datum=NAD83") && p4.contains("+units=us-ft"), p4)
-    // the derived string resolves and agrees with the WKT it came from
-    val a = Crs.resolve(p4); val b = Crs.resolve(crs.getString(1))
-    val (ax, ay) = a.forward(-74.0, 40.7); val (bx, by) = b.forward(-74.0, 40.7)
-    assert(math.abs(ax - bx) < 1e-6 && math.abs(ay - by) < 1e-6)
+    // the committed set's .prj is the ESRI WKT of EPSG:2263
+    // (tools/make_shp_fixture.py); the reference snapshot's taxi_zones,
+    // in the same CRS, is checked too wherever that tree is present
+    val shps = Seq(new java.io.File("src/test/resources/shp/nyc_zones.shp").getAbsolutePath) ++
+      Seq("/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones.shp")
+        .filter(new java.io.File(_).isFile)
+    shps.foreach { shp =>
+      val meta = graft.sources.GeoRead.readMeta(spark, shp)
+      val crs = meta.selectExpr("layers[0].geometry_fields[0].crs.proj4 AS p4",
+        "layers[0].geometry_fields[0].crs.wkt AS wkt").collect()(0)
+      val p4 = crs.getString(0)
+      assert(p4.startsWith("+proj=lcc"), s"proj4: $p4")
+      assert(p4.contains("+datum=NAD83") && p4.contains("+units=us-ft"), p4)
+      // the derived string resolves and agrees with the WKT it came from
+      val a = Crs.resolve(p4); val b = Crs.resolve(crs.getString(1))
+      val (ax, ay) = a.forward(-74.0, 40.7); val (bx, by) = b.forward(-74.0, 40.7)
+      assert(math.abs(ax - bx) < 1e-6 && math.abs(ay - by) < 1e-6)
+    }
   }
 
   // --- WKT2 (ISO 19162 / PROJ >= 6 output form) ---------------------------

@@ -16,9 +16,12 @@ class SourcesSpec extends SparkSpec {
 
   test("st_read opens zipped shapefile / geojson (vsizip parity)") {
     val tmp = java.nio.file.Files.createTempDirectory("zipread")
-    // zip the taxi_zones sidecar set with an independent producer (JDK zip)
-    val srcDir = new java.io.File("/root/reference/test/data/nyc_taxi/taxi_zones")
-    val members = srcDir.listFiles().filter(_.getName.startsWith("taxi_zones."))
+    // zip the committed NYC-zones sidecar set (tools/make_shp_fixture.py:
+    // zones inside and outside the bbox below) with an independent
+    // producer (JDK zip)
+    val srcDir = new java.io.File("src/test/resources/shp").getAbsoluteFile
+    val members = srcDir.listFiles().filter(_.getName.startsWith("nyc_zones."))
+      .filterNot(_.getName.endsWith(".zip"))
     val shpZip = tmp.resolve("zones.zip").toString
     val zout = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(shpZip))
     members.foreach { f =>
@@ -26,12 +29,12 @@ class SourcesSpec extends SparkSpec {
       java.nio.file.Files.copy(f.toPath, zout); zout.closeEntry()
     }
     zout.close()
-    val direct = Shapefile.read(spark, s"$srcDir/taxi_zones.shp")
+    val direct = Shapefile.read(spark, s"$srcDir/nyc_zones.shp")
     val zipped = GeoRead.read(spark, shpZip)
     assert(zipped.count() == direct.count())
     assert(zipped.schema == direct.schema)
     // SQL surface + explicit inner-entry selection both work
-    assert(spark.sql(s"SELECT * FROM st_read('$shpZip/taxi_zones.shp')").count() == direct.count())
+    assert(spark.sql(s"SELECT * FROM st_read('$shpZip/nyc_zones.shp')").count() == direct.count())
     // options compose with zip (bbox filter reaches the extracted source)
     val boxed = spark.sql(
       s"SELECT * FROM st_read('$shpZip', 930000.0, 120000.0, 1030000.0, 220000.0)")

@@ -1,8 +1,15 @@
 #!/usr/bin/env python3
-"""Generates src/test/resources/golden/taxi_zones_golden.csv — an
-INDEPENDENT parse of the reference's taxi_zones shapefile
-(/root/reference/test/data/nyc_taxi/taxi_zones/) used by the q_src_shp
-driver-oracle row.
+"""Writes a golden CSV that is an INDEPENDENT parse of a shapefile set;
+the q_src_shp, q_src_gdal_opts and q_src_zip gate oracle rows read
+src/test/resources/golden/nyc_zones_golden.csv, made from the committed
+fixture (tools/make_shp_fixture.py):
+
+    python3 tools/make_shp_golden.py src/test/resources/shp/nyc_zones \
+        src/test/resources/golden/nyc_zones_golden.csv
+
+The first argument is the set's path without extension (.dbf and .shp
+are read), the second the CSV to write. Attributes are decoded as
+Latin-1, the shapefile default when no .cpg is present.
 
 This is a from-scratch struct-based parser of the public ESRI
 shapefile + dBASE III specs (no shared code with the Scala reader in
@@ -14,10 +21,10 @@ the raw doubles — identical arithmetic to JTS envelopes, no rounding).
 """
 import os, struct, sys
 
-base = sys.argv[1] if len(sys.argv) > 1 else "/root/reference/test/data/nyc_taxi/taxi_zones/taxi_zones"
-out = os.path.join(os.path.dirname(__file__), "..", "src", "test", "resources",
-                   "golden", "taxi_zones_golden.csv")
-os.makedirs(os.path.dirname(out), exist_ok=True)
+if len(sys.argv) != 3:
+    raise SystemExit("usage: make_shp_golden.py <shapefile base without extension> <out.csv>")
+base, out = sys.argv[1], sys.argv[2]
+os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
 
 # ---- .dbf (dBASE III): header, field descriptors, fixed-width records ----
 dbf = open(base + ".dbf", "rb").read()
@@ -89,7 +96,7 @@ def fmt(v):
         return '"' + v.replace('"', '""') + '"'
     return str(v)
 
-with open(out, "w") as f:
+with open(out, "w", encoding="utf-8") as f:
     f.write(",".join([fld[0].lower() for fld in fields]
                      + ["npoints", "xmin", "ymin", "xmax", "ymax"]) + "\n")
     for vals, (npts, x0, y0, x1, y1) in zip(records, geoms):
