@@ -269,11 +269,15 @@ object Graft {
         litNum(exprs(0)), litNum(exprs(1)), litNum(exprs(2)), litNum(exprs(3)),
         litNum(exprs(4)).toLong,
         if (exprs.length > 5) litNum(exprs(5)).toLong else 42L)), "scala_udf")
-    // optimizer rules (spatial join rewrite + bbox data skipping); also
-    // injectable via `spark.sql.extensions=graft.plans.GraftExtensions`
+    // optimizer rules (spatial join rewrite + bbox data skipping) and the
+    // strategy that plans the rewrite's index join; also injectable via
+    // `spark.sql.extensions=graft.plans.GraftExtensions`
     spark.experimental.extraOptimizations = Seq(
       graft.plans.NativeDispatchRule(spark),
       graft.plans.SpatialJoinRule(spark), graft.plans.SpatialFilterRule(spark))
+    if (!spark.experimental.extraStrategies.contains(graft.plans.SpatialJoinStrategy))
+      spark.experimental.extraStrategies =
+        graft.plans.SpatialJoinStrategy +: spark.experimental.extraStrategies
     spark
   }
 

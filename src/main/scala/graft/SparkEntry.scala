@@ -883,7 +883,7 @@ object SparkEntry {
       // eagerly, then unset, so the conf cannot leak into later
       // queries' lazy evaluation (the Helmert-replicating transform
       // oracles must keep seeing the no-grid fallback)
-      s.conf.set("spark.graft.crs.gridDir", "/root/repo/src/test/resources/ntv2")
+      s.conf.set("spark.graft.crs.gridDir", fixture("ntv2"))
       val out = try {
         val rows = s.sql("""SELECT id, dir, lon_in, lat_in,
              st_x(st_transform(st_point(lon_in, lat_in), src, dst, true)) AS lon_out,
@@ -1828,7 +1828,7 @@ object SparkEntry {
     // fixture recipe), where an RE2 replication genuinely tears.
     "q_doc_html_hostile" -> ((s, dir) => {
       Graft.install(s)
-      s.read.parquet("/root/repo/src/test/resources/html/hostile.parquet")
+      s.read.parquet(fixture("html/hostile.parquet"))
         .selectExpr("id", "html_to_text(html) AS txt").orderBy("id")
     }),
 
@@ -3303,7 +3303,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
       graft.sources.GeoPackage.read(s,
-          "/root/repo/src/test/resources/sample.gpkg", "pts")
+          fixture("sample.gpkg"), "pts")
         .select(col("fid"), col("name"), col("value"), col("flag"), col("tag"),
           st_astext(col("geom")).as("wkt"))
         .orderBy("fid")
@@ -3349,7 +3349,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      sources.GeoRead.read(s, "/root/repo/src/test/resources/mif/sample.mif",
+      sources.GeoRead.read(s, fixture("mif/sample.mif"),
           sources.GeoRead.ReadOptions())
         .select(col("name"), col("pop"), col("area"), col("active"), col("born"),
           st_geometrytype(col("geom")).as("gtype"),
@@ -3385,7 +3385,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      val p = "/root/repo/src/test/resources/gpx/sample.gpx"
+      val p = fixture("gpx/sample.gpx")
       def rd(layer: String) =
         sources.GeoRead.read(s, p, sources.GeoRead.ReadOptions(layer = layer))
       val nulD = lit(null).cast("double"); val nulS = lit(null).cast("string")
@@ -3428,7 +3428,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      sources.GeoRead.read(s, "/root/repo/src/test/resources/dxf/sample.dxf")
+      sources.GeoRead.read(s, fixture("dxf/sample.dxf"))
         .select(col("entity_handle").as("handle"), col("layer"),
           col("linetype"), col("text"),
           st_geometrytype(col("geom")).as("gtype"),
@@ -3446,7 +3446,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      val base = "/root/repo/src/test/resources/gmt/"
+      val base = fixture("gmt") + "/"
       Seq("poly.gmt", "mpoly.gmt", "lines.gmt", "mlines.gmt", "points.gmt")
         .map { f =>
           sources.GeoRead.read(s, base + f)
@@ -3465,7 +3465,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      val base = "/root/repo/src/test/resources/topojson/"
+      val base = fixture("topojson") + "/"
       Seq("quantized.topojson", "plain.topojson").map { f =>
         sources.GeoRead.read(s, base + f)
           .select(lit(f).as("file"), col("layer"), col("id"),
@@ -3484,7 +3484,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      val p = "/root/repo/src/test/resources/sample.sqlite"
+      val p = fixture("sample.sqlite")
       Seq("places", "routes", "areas").map { l =>
         sources.Spatialite.read(s, p, l)
           .select(lit(l).as("layer"), col("pk").cast("long").as("rowid"),
@@ -3564,7 +3564,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      val base = "/root/repo/src/test/resources/filegdb/sample.gdb"
+      val base = fixture("filegdb/sample.gdb")
       Seq("points", "roads", "parcels", "spots").map { l =>
         sources.OpenFileGdb.read(s, base, l)
           .select(lit(l).as("layer"), col("OBJECTID").cast("long").as("oid"),
@@ -3579,7 +3579,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      sources.GeoRead.read(s, "/root/repo/src/test/resources/gml/sample.gml")
+      sources.GeoRead.read(s, fixture("gml/sample.gml"))
         .select(col("layer"), col("fid"),
           col("props").getItem("name").as("name"), col("srs"),
           st_geometrytype(col("geom")).as("gtype"),
@@ -3593,7 +3593,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      sources.GeoRead.read(s, "/root/repo/src/test/resources/kml/sample.kml")
+      sources.GeoRead.read(s, fixture("kml/sample.kml"))
         .select(col("folder"), col("name"),
           st_geometrytype(col("geom")).as("gtype"),
           st_npoints(col("geom")).as("npts"),
@@ -3612,7 +3612,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      val base = "/root/repo/src/test/resources/esri"
+      val base = fixture("esri")
       Seq("lines", "mpoints", "points", "polygons").map { layer =>
         sources.GeoRead.read(s, s"$base/$layer.json")
           .select(lit(layer).as("layer"),
@@ -3632,7 +3632,7 @@ object SparkEntry {
       Graft.install(s)
       import org.apache.spark.sql.functions._
       import graft.GeoFunctions._
-      sources.GeoRead.read(s, "/root/repo/src/test/resources/kml/sample.kmz")
+      sources.GeoRead.read(s, fixture("kml/sample.kmz"))
         .select(col("folder"), col("name"),
           st_geometrytype(col("geom")).as("gtype"),
           st_npoints(col("geom")).as("npts"),
@@ -3952,13 +3952,13 @@ object SparkEntry {
     // hand-rolled protobuf encoder — src/test/scala/graft/OsmFixture.scala);
     // the oracle is the hand-stated expected content
     "q_src_osm" -> q(Seq(),
-      """SELECT kind, id,
+      s"""SELECT kind, id,
          round(coalesce(lat, -999.0), 7) AS lat7, round(coalesce(lon, -999.0), 7) AS lon7,
          coalesce(element_at(tags, 'highway'), '') AS hw, coalesce(element_at(tags, 'name'), '') AS nm,
          coalesce(concat_ws(',', refs), '') AS refs_csv,
          coalesce(concat_ws('|', ref_roles), '') AS roles,
          coalesce(concat_ws('|', ref_types), '') AS types
-         FROM st_readosm('/root/repo/src/test/resources/mini.osm.pbf')
+         FROM st_readosm('${fixture("mini.osm.pbf")}')
          ORDER BY kind, id"""),
 
     // ST_Read_Meta over all three binary-container fixtures: the layer
@@ -5751,8 +5751,8 @@ object SparkEntry {
       // (tools/make_gsb_fixture.py) — op-order-replicated bilinear +
       // 4-round inverse, so the doubles are bit-identical
       "q_geo_gridshift" ->
-        """SELECT id, dir, lon_in, lat_in, lon_out, lat_out
-           FROM read_csv('/root/repo/src/test/resources/golden/gridshift_golden.csv',
+        s"""SELECT id, dir, lon_in, lat_in, lon_out, lat_out
+           FROM read_csv('${fixture("golden/gridshift_golden.csv")}',
              header=true,
              columns={'id':'INTEGER','dir':'VARCHAR','lon_in':'DOUBLE',
                       'lat_in':'DOUBLE','lon_out':'DOUBLE','lat_out':'DOUBLE'})
@@ -6054,8 +6054,8 @@ object SparkEntry {
       // (tools/make_html_fixture.py) — certifies the scanner-only cases
       // the RE2 replication above cannot express
       "q_doc_html_hostile" ->
-        """SELECT id, txt
-           FROM '/root/repo/src/test/resources/golden/html_hostile_golden.parquet'
+        s"""SELECT id, txt
+           FROM '${fixture("golden/html_hostile_golden.parquet")}'
            ORDER BY id""",
 
       "q_doc_quality" ->
@@ -6273,8 +6273,8 @@ object SparkEntry {
       // cell-decode construction (Covers, not Contains — lattice
       // points can sit exactly ON a cell boundary)
       "q_geo_geohash" ->
-        """SELECT c_custkey, gh, cx, cy, CAST(true AS BOOLEAN) AS inside
-           FROM read_csv('/root/repo/src/test/resources/golden/geohash_golden.csv',
+        s"""SELECT c_custkey, gh, cx, cy, CAST(true AS BOOLEAN) AS inside
+           FROM read_csv('${fixture("golden/geohash_golden.csv")}',
              header=true,
              columns={'c_custkey':'BIGINT','gh':'VARCHAR','cx':'DOUBLE','cy':'DOUBLE'})
            ORDER BY c_custkey""",
@@ -8071,17 +8071,17 @@ object SparkEntry {
       // independent python golden (tools/make_mif_golden.py): metadata
       // recomputed from the same coordinate lists, no shared parser
       "q_src_mif" ->
-        """SELECT name, pop, area, active, born, gtype, npts,
+        s"""SELECT name, pop, area, active, born, gtype, npts,
              minx, miny, maxx, maxy
-           FROM read_csv('/root/repo/src/test/resources/golden/mif_golden.csv',
+           FROM read_csv('${fixture("golden/mif_golden.csv")}',
              header=true, types={'born': 'VARCHAR'})
            ORDER BY name""",
 
       // independent python golden (tools/make_gmt_golden.py)
       // independent python golden (tools/make_topojson_golden.py)
       "q_src_topojson" ->
-        """SELECT file, layer, id, name, gtype, npts, x0, y0, x1, y1
-           FROM read_csv('/root/repo/src/test/resources/golden/topojson_golden.csv',
+        s"""SELECT file, layer, id, name, gtype, npts, x0, y0, x1, y1
+           FROM read_csv('${fixture("golden/topojson_golden.csv")}',
              header=true,
              columns={'file':'VARCHAR','layer':'VARCHAR','id':'VARCHAR',
                       'name':'VARCHAR','gtype':'VARCHAR','npts':'INTEGER',
@@ -8090,8 +8090,8 @@ object SparkEntry {
 
       // independent python golden (tools/make_spatialite_fixture.py)
       "q_src_spatialite" ->
-        """SELECT layer, rowid, name, gtype, npts, x0, y0, x1, y1
-           FROM read_csv('/root/repo/src/test/resources/golden/spatialite_golden.csv',
+        s"""SELECT layer, rowid, name, gtype, npts, x0, y0, x1, y1
+           FROM read_csv('${fixture("golden/spatialite_golden.csv")}',
              header=true,
              columns={'layer':'VARCHAR','rowid':'BIGINT','name':'VARCHAR',
                       'gtype':'VARCHAR','npts':'INTEGER',
@@ -8124,8 +8124,8 @@ object SparkEntry {
       // fixture bytes and this CSV come from the same from-scratch
       // spec implementation, sharing no code with the Scala reader
       "q_src_gdb" ->
-        """SELECT layer, oid, name, gtype, npts, x0, y0, x1, y1
-           FROM read_csv('/root/repo/src/test/resources/golden/gdb_golden.csv',
+        s"""SELECT layer, oid, name, gtype, npts, x0, y0, x1, y1
+           FROM read_csv('${fixture("golden/gdb_golden.csv")}',
              header=true,
              columns={'layer':'VARCHAR','oid':'BIGINT','name':'VARCHAR',
                       'gtype':'VARCHAR','npts':'INTEGER',
@@ -8133,8 +8133,8 @@ object SparkEntry {
            ORDER BY layer, oid""",
 
       "q_src_gmt" ->
-        """SELECT file, name, id, gtype, npts, x0, y0, x1, y1
-           FROM read_csv('/root/repo/src/test/resources/golden/gmt_golden.csv',
+        s"""SELECT file, name, id, gtype, npts, x0, y0, x1, y1
+           FROM read_csv('${fixture("golden/gmt_golden.csv")}',
              header=true,
              columns={'file':'VARCHAR','name':'VARCHAR','id':'BIGINT',
                       'gtype':'VARCHAR','npts':'INTEGER',
@@ -8144,8 +8144,8 @@ object SparkEntry {
       // independent python-math golden (tools/make_dxf_golden.py):
       // empties read as NULL, matching the engine's nullable attrs
       "q_src_dxf" ->
-        """SELECT handle, layer, linetype, text, gtype, npts, x0, y0, x1, y1
-           FROM read_csv('/root/repo/src/test/resources/golden/dxf_golden.csv',
+        s"""SELECT handle, layer, linetype, text, gtype, npts, x0, y0, x1, y1
+           FROM read_csv('${fixture("golden/dxf_golden.csv")}',
              header=true,
              columns={'handle':'VARCHAR','layer':'VARCHAR','linetype':'VARCHAR',
                       'text':'VARCHAR','gtype':'VARCHAR','npts':'INTEGER',
@@ -8163,8 +8163,8 @@ object SparkEntry {
       // (tools/make_gpx_golden.py); explicit column types keep DuckDB
       // from auto-promoting ISO timestamps/ints past the Spark schema
       "q_src_gpx" ->
-        """SELECT layer, a, b, c, name, ele, time, x, y, npts
-           FROM read_csv('/root/repo/src/test/resources/golden/gpx_golden.csv',
+        s"""SELECT layer, a, b, c, name, ele, time, x, y, npts
+           FROM read_csv('${fixture("golden/gpx_golden.csv")}',
              header=true,
              columns={'layer':'VARCHAR','a':'BIGINT','b':'BIGINT','c':'BIGINT',
                       'name':'VARCHAR','ele':'DOUBLE','time':'VARCHAR',
@@ -8174,8 +8174,8 @@ object SparkEntry {
       // independent xml.etree parse of the committed KML fixture
       // (tools/make_kml_golden.py)
       "q_src_kml" ->
-        """SELECT folder, name, gtype, npts, x0, y1, state
-           FROM read_csv('/root/repo/src/test/resources/golden/kml_golden.csv',
+        s"""SELECT folder, name, gtype, npts, x0, y1, state
+           FROM read_csv('${fixture("golden/kml_golden.csv")}',
              header=true,
              columns={'folder':'VARCHAR','name':'VARCHAR','gtype':'VARCHAR',
                       'npts':'BIGINT','x0':'DOUBLE','y1':'DOUBLE','state':'VARCHAR'})
@@ -8184,8 +8184,8 @@ object SparkEntry {
       // independent python-json parse of the committed ESRI JSON
       // fixtures (tools/make_esrijson_golden.py)
       "q_src_esrijson" ->
-        """SELECT layer, name, val, gtype, npts, x0, y1
-           FROM read_csv('/root/repo/src/test/resources/golden/esrijson_golden.csv',
+        s"""SELECT layer, name, val, gtype, npts, x0, y1
+           FROM read_csv('${fixture("golden/esrijson_golden.csv")}',
              header=true,
              columns={'layer':'VARCHAR','name':'VARCHAR','val':'VARCHAR',
                       'gtype':'VARCHAR','npts':'BIGINT','x0':'DOUBLE','y1':'DOUBLE'})
@@ -8194,8 +8194,8 @@ object SparkEntry {
       // the KMZ wraps the SAME committed document the kml golden
       // accounts for — the oracle is byte-for-byte the q_src_kml one
       "q_src_kmz" ->
-        """SELECT folder, name, gtype, npts, x0, y1, state
-           FROM read_csv('/root/repo/src/test/resources/golden/kml_golden.csv',
+        s"""SELECT folder, name, gtype, npts, x0, y1, state
+           FROM read_csv('${fixture("golden/kml_golden.csv")}',
              header=true,
              columns={'folder':'VARCHAR','name':'VARCHAR','gtype':'VARCHAR',
                       'npts':'BIGINT','x0':'DOUBLE','y1':'DOUBLE','state':'VARCHAR'})
@@ -8280,8 +8280,8 @@ object SparkEntry {
            GROUP BY 1 ORDER BY 1""",
 
       "q_src_gml" ->
-        """SELECT layer, fid, name, srs, gtype, npts, x0, y0, x1, y1
-           FROM read_csv('/root/repo/src/test/resources/golden/gml_golden.csv',
+        s"""SELECT layer, fid, name, srs, gtype, npts, x0, y0, x1, y1
+           FROM read_csv('${fixture("golden/gml_golden.csv")}',
              header=true,
              columns={'layer':'VARCHAR','fid':'VARCHAR','name':'VARCHAR',
                       'srs':'VARCHAR','gtype':'VARCHAR','npts':'INTEGER',

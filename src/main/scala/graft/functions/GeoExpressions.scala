@@ -116,6 +116,7 @@ case class HilbertEncode(
  */
 case class GeoPredicate(name: String, left: Expression, right: Expression)
     extends BinaryExpression {
+  import PreparedPredicates.{decodePoint, preparedLeft, preparedRight}
 
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = true
@@ -170,81 +171,21 @@ case class GeoPredicate(name: String, left: Expression, right: Expression)
   }
 
   // zero-allocation fast path for the hottest shape: a plain 2-D point
-  // WKB (21 bytes, type 1) probed against the prepared side — decode
-  // x/y straight from the bytes into a per-thread scratch Point
-  // instead of running the full WKBReader per row. One scratch per
-  // operand side so PLAIN mode can decode both at once.
+  // WKB decoded into a per-thread scratch Point (see
+  // [[PreparedPredicates.decodePoint]]). One scratch per operand side
+  // so PLAIN mode can decode both at once.
   @transient private lazy val scratchL = new ThreadLocal[org.locationtech.jts.geom.Point] {
-    override def initialValue(): org.locationtech.jts.geom.Point =
-      Jts.gf.createPoint(new org.locationtech.jts.geom.Coordinate(0, 0))
+    override def initialValue(): org.locationtech.jts.geom.Point = PreparedPredicates.scratchPoint()
   }
   @transient private lazy val scratchR = new ThreadLocal[org.locationtech.jts.geom.Point] {
-    override def initialValue(): org.locationtech.jts.geom.Point =
-      Jts.gf.createPoint(new org.locationtech.jts.geom.Coordinate(0, 0))
-  }
-
-  private def asPoint(
-      b: Array[Byte],
-      scratch: ThreadLocal[org.locationtech.jts.geom.Point]): org.locationtech.jts.geom.Point = {
-    if (b.length != 21) return null
-    val le = b(0) == 1
-    val t = if (le)
-      (b(1) & 0xFF) | ((b(2) & 0xFF) << 8) | ((b(3) & 0xFF) << 16) | ((b(4) & 0xFF) << 24)
-    else
-      (b(4) & 0xFF) | ((b(3) & 0xFF) << 8) | ((b(2) & 0xFF) << 16) | ((b(1) & 0xFF) << 24)
-    if (t != 1) return null
-    val bb = java.nio.ByteBuffer.wrap(b, 5, 16)
-      .order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-    val p = scratch.get()
-    val c = p.getCoordinate
-    c.x = bb.getDouble; c.y = bb.getDouble
-    p.geometryChanged()
-    p
-  }
-
-  // containsProperly(A, B) = B touches A's interior and never A's
-  // boundary; expressible as a DE-9IM pattern so the non-anchored
-  // direction needs no PreparedGeometry (JTS only exposes the named
-  // method on PreparedGeometry).
-  private final val ContainsProperlyPattern = "T**FF*FF*"
-
-  /** `name(l, p)` with the right operand prepared: the inverse form. */
-  private def preparedRight(l: Geometry, p: PreparedGeometry): Boolean = name match {
-    case "st_intersects" => p.intersects(l)
-    case "st_contains" => p.within(l)
-    case "st_containsproperly" => l.relate(p.getGeometry, ContainsProperlyPattern)
-    case "st_within" => p.contains(l)
-    case "st_covers" => p.coveredBy(l)
-    case "st_coveredby" => p.covers(l)
-    case "st_crosses" => p.crosses(l)
-    case "st_disjoint" => p.disjoint(l)
-    case "st_equals" => p.getGeometry.equalsTopo(l)
-    case "st_overlaps" => p.overlaps(l)
-    case "st_touches" => p.touches(l)
-    case other => sys.error(s"unknown predicate $other")
-  }
-
-  /** `name(p, r)` with the left operand prepared. */
-  private def preparedLeft(p: PreparedGeometry, r: Geometry): Boolean = name match {
-    case "st_intersects" => p.intersects(r)
-    case "st_contains" => p.contains(r)
-    case "st_containsproperly" => p.containsProperly(r)
-    case "st_within" => p.within(r)
-    case "st_covers" => p.covers(r)
-    case "st_coveredby" => p.coveredBy(r)
-    case "st_crosses" => p.crosses(r)
-    case "st_disjoint" => p.disjoint(r)
-    case "st_equals" => p.getGeometry.equalsTopo(r)
-    case "st_overlaps" => p.overlaps(r)
-    case "st_touches" => p.touches(r)
-    case other => sys.error(s"unknown predicate $other")
+    override def initialValue(): org.locationtech.jts.geom.Point = PreparedPredicates.scratchPoint()
   }
 
   /** `name(l, r)` on two plain geometries. */
   private def unprepared(l: Geometry, r: Geometry): Boolean = name match {
     case "st_intersects" => l.intersects(r)
     case "st_contains" => l.contains(r)
-    case "st_containsproperly" => l.relate(r, ContainsProperlyPattern)
+    case "st_containsproperly" => l.relate(r, PreparedPredicates.ContainsProperlyPattern)
     case "st_within" => l.within(r)
     case "st_covers" => l.covers(r)
     case "st_coveredby" => l.coveredBy(r)
@@ -260,30 +201,30 @@ case class GeoPredicate(name: String, left: Expression, right: Expression)
     val lb = l.asInstanceOf[Array[Byte]]
     val rb = r.asInstanceOf[Array[Byte]]
     def lg: Geometry = {
-      val p = asPoint(lb, scratchL); if (p != null) p else Jts.read(lb)
+      val p = decodePoint(lb, scratchL.get()); if (p != null) p else Jts.read(lb)
     }
     def rg: Geometry = {
-      val p = asPoint(rb, scratchR); if (p != null) p else Jts.read(rb)
+      val p = decodePoint(rb, scratchR.get()); if (p != null) p else Jts.read(rb)
     }
     if (name == "st_intersects_extent")
       // bbox-only test (reference st_intersects_extent.cpp:17-31)
       return lg.getEnvelopeInternal.intersects(rg.getEnvelopeInternal)
     mode match {
-      case ANCHOR_R => preparedRight(lg, prepR(rb))
-      case ANCHOR_L => preparedLeft(prepL(lb), rg)
+      case ANCHOR_R => preparedRight(name, lg, prepR(rb))
+      case ANCHOR_L => preparedLeft(name, prepL(lb), rg)
       case _ =>
         // 21-byte 2-D point right operand: zero-allocation scratch
         // decode, no cache — preparing a point buys nothing. NaN
         // coordinates fall through to the cache path so
         // WKBReader's POINT-EMPTY mapping is preserved.
-        val rp = asPoint(rb, scratchR)
+        val rp = decodePoint(rb, scratchR.get())
         if (rp != null && !java.lang.Double.isNaN(rp.getCoordinate.x) &&
             !java.lang.Double.isNaN(rp.getCoordinate.y))
           return unprepared(lg, rp)
         val cache = rightCache()
         val e = if (cache == null) null else cache.lookup(rb)
         if (e == null) unprepared(lg, Jts.read(rb))
-        else if (e.prep != null) preparedRight(lg, e.prep)
+        else if (e.prep != null) preparedRight(name, lg, e.prep)
         else unprepared(lg, e.geom) // first sighting: reuse the parse only
     }
   }
@@ -296,6 +237,77 @@ case class GeoPredicate(name: String, left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/**
+ * The named binary predicates with one operand prepared, and the
+ * zero-allocation point decode: shared by [[GeoPredicate]] and the
+ * broadcast index join, which both probe a prepared build-side
+ * geometry with many plain operands.
+ */
+object PreparedPredicates {
+
+  // containsProperly(A, B) = B touches A's interior and never A's
+  // boundary; expressible as a DE-9IM pattern so the non-anchored
+  // direction needs no PreparedGeometry (JTS only exposes the named
+  // method on PreparedGeometry).
+  final val ContainsProperlyPattern = "T**FF*FF*"
+
+  /** `name(l, p)` with the right operand prepared: the inverse form. */
+  def preparedRight(name: String, l: Geometry, p: PreparedGeometry): Boolean = name match {
+    case "st_intersects" => p.intersects(l)
+    case "st_contains" => p.within(l)
+    case "st_containsproperly" => l.relate(p.getGeometry, ContainsProperlyPattern)
+    case "st_within" => p.contains(l)
+    case "st_covers" => p.coveredBy(l)
+    case "st_coveredby" => p.covers(l)
+    case "st_crosses" => p.crosses(l)
+    case "st_disjoint" => p.disjoint(l)
+    case "st_equals" => p.getGeometry.equalsTopo(l)
+    case "st_overlaps" => p.overlaps(l)
+    case "st_touches" => p.touches(l)
+    case other => sys.error(s"unknown predicate $other")
+  }
+
+  /** `name(p, r)` with the left operand prepared. */
+  def preparedLeft(name: String, p: PreparedGeometry, r: Geometry): Boolean = name match {
+    case "st_intersects" => p.intersects(r)
+    case "st_contains" => p.contains(r)
+    case "st_containsproperly" => p.containsProperly(r)
+    case "st_within" => p.within(r)
+    case "st_covers" => p.covers(r)
+    case "st_coveredby" => p.coveredBy(r)
+    case "st_crosses" => p.crosses(r)
+    case "st_disjoint" => p.disjoint(r)
+    case "st_equals" => p.getGeometry.equalsTopo(r)
+    case "st_overlaps" => p.overlaps(r)
+    case "st_touches" => p.touches(r)
+    case other => sys.error(s"unknown predicate $other")
+  }
+
+  /** A Point for [[decodePoint]] to overwrite. */
+  def scratchPoint(): org.locationtech.jts.geom.Point =
+    Jts.gf.createPoint(new org.locationtech.jts.geom.Coordinate(0, 0))
+
+  /** A plain 2-D point WKB (21 bytes, type 1) decoded into `into`
+   *  without the WKBReader, or null for any other WKB. NaN coordinates
+   *  are decoded as they are: callers that need WKBReader's POINT EMPTY
+   *  mapping check for them. */
+  def decodePoint(b: Array[Byte], into: org.locationtech.jts.geom.Point): org.locationtech.jts.geom.Point = {
+    if (b.length != 21) return null
+    val le = b(0) == 1
+    val t = if (le)
+      (b(1) & 0xFF) | ((b(2) & 0xFF) << 8) | ((b(3) & 0xFF) << 16) | ((b(4) & 0xFF) << 24)
+    else
+      (b(4) & 0xFF) | ((b(3) & 0xFF) << 8) | ((b(2) & 0xFF) << 16) | ((b(1) & 0xFF) << 24)
+    if (t != 1) return null
+    val bb = java.nio.ByteBuffer.wrap(b, 5, 16)
+      .order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    val c = into.getCoordinate
+    c.x = bb.getDouble; c.y = bb.getDouble
+    into.geometryChanged()
+    into
+  }
 }
 
 /**

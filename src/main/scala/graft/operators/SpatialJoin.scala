@@ -3,14 +3,17 @@ package graft.operators
 import graft.GeoFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Literal, ScalarSubquery}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnShim
 
 /**
- * Distributed spatial join.
+ * Distributed grid spatial join, for two sides too large to broadcast.
  *
+ * SQL joins with a side under `spark.sql.autoBroadcastJoinThreshold`
+ * do not come here: [[graft.plans.SpatialJoinRule]] plans them as a
+ * broadcast STR-tree index join ([[graft.plans.BroadcastIndexJoinExec]]).
  * The reference rewrites `a JOIN b ON ST_Intersects(a.g, b.g)` into a
  * single-node IEJoin over bbox ranges (core/optimizer_rules.cpp:33-279
  * + DuckDB physical_iejoin). A range join does not scale on Spark —
@@ -41,6 +44,8 @@ import org.apache.spark.sql.graft.ColumnShim
  * bbox extent of a sample of each side ([[cellSizeFrame]]), the
  * standard heuristic for grid spatial joins, read as one uncorrelated
  * scalar subquery that Spark evaluates once when the join executes.
+ * Its sample is bounded per partition and aggregated in one coalesced
+ * task, so it plans no exchange.
  */
 object SpatialJoin {
 
@@ -67,23 +72,10 @@ object SpatialJoin {
       leftGeom: Column, rightGeom: Column,
       predicate: String = "st_intersects",
       cellSize: Double = 0.0,
-      distance: Double = 0.0,
-      broadcastRight: Boolean = false): DataFrame = {
+      distance: Double = 0.0): DataFrame = {
     require(supported.contains(predicate), s"unsupported spatial join predicate: $predicate")
 
     val pad = if (predicate == "st_dwithin") distance else 0.0
-
-    if (broadcastRight) {
-      // small dim side: plain broadcast nested-loop with bbox prefilter
-      val l = left.withColumn("__lg", leftGeom).withColumn("__lb", st_extent(col("__lg")))
-      val r = right.withColumn("__rg", rightGeom).withColumn("__rb", st_extent(col("__rg")))
-      val cond =
-        col("__lb.min_x") <= col("__rb.max_x") + pad && col("__lb.max_x") >= col("__rb.min_x") - pad &&
-        col("__lb.min_y") <= col("__rb.max_y") + pad && col("__lb.max_y") >= col("__rb.min_y") - pad &&
-        exact(predicate, col("__lg"), col("__rg"), distance)
-      return l.join(broadcast(r), cond, "inner")
-        .drop("__lg", "__lb", "__rg", "__rb")
-    }
 
     // a fixed cell size, or one uncorrelated scalar subquery over the
     // estimator: the same expression (one exprId) feeds both explodes
@@ -149,13 +141,16 @@ object SpatialJoin {
     }
 
   /** One side's bbox extents, tagged `s` = `side`, over a seeded random
-   *  sample (plus the first 64 rows so tiny inputs always contribute).
-   *  LocalLimit keeps the scan cheap — each task stops after its share
-   *  of rows. */
+   *  sample (plus each partition's first 64 rows so tiny inputs always
+   *  contribute). Both bounds are per-partition `LocalLimit`s: a
+   *  partition's scan stops after its share of rows, and no global
+   *  limit gathers rows through an exchange. */
   private def bboxSample(df: DataFrame, g: Column, side: Int): DataFrame = {
     val b = df.select(st_extent(g).as("b"))
-    b.sample(withReplacement = false, 0.1, seed = 42).limit(4096)
-      .union(b.limit(64))
+    def localLimit(d: DataFrame, n: Int): DataFrame =
+      ColumnShim.ofRows(d.sparkSession, LocalLimit(Literal(n), d.queryExecution.analyzed))
+    localLimit(b.sample(withReplacement = false, 0.1, seed = 42), 1024)
+      .union(localLimit(b, 64))
       .select(lit(side).as("s"), col("b"))
   }
 
@@ -174,7 +169,9 @@ object SpatialJoin {
       when(edge > 0, edge).otherwise(span / 256.0)
     }
     val cell = lit(2.0) * greatest(extent(0), extent(1))
-    bboxSample(left, leftGeom, 0).union(bboxSample(right, rightGeom, 1))
+    // one partition, by a narrow coalesce: the global aggregate then
+    // needs no exchange
+    bboxSample(left, leftGeom, 0).union(bboxSample(right, rightGeom, 1)).coalesce(1)
       .agg(coalesce(when(cell > 0, cell), lit(1.0)).as("__cs"))
   }
 

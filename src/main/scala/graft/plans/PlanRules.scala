@@ -14,17 +14,27 @@ import org.apache.spark.sql.graft.ColumnShim
  * RangeJoinSpatialPredicateRewriter (core/optimizer_rules.cpp:33-279):
  * `a JOIN b ON ST_Intersects(a.g, b.g)` would otherwise execute as a
  * BroadcastNestedLoopJoin (quadratic — the Spark analog of the
- * blockwise-NL join the reference avoids). We rewrite it to the grid
- * decomposition of [[SpatialJoin]]: explode to covering cells,
- * equi-join on cell, reference-point dedup, exact predicate.
+ * blockwise-NL join the reference avoids). The rewrite picks one of two
+ * plans:
+ *
+ *  - [[SpatialIndexJoin]], when either side's static size estimate is
+ *    at or under `spark.sql.autoBroadcastJoinThreshold` and no cell
+ *    size is configured: the smaller side (the right on a tie) is
+ *    broadcast and probed through a per-task STR-tree
+ *    ([[BroadcastIndexJoinExec]], planned by [[SpatialJoinStrategy]]).
+ *    The rule builds no DataFrame and runs no nested optimizer for it.
+ *  - otherwise (both sides over the threshold, the threshold at -1, or
+ *    `spark.graft.spatialJoin.cellSize` > 0), the grid decomposition of
+ *    [[SpatialJoin]]: explode to covering cells, equi-join on cell,
+ *    reference-point dedup, exact predicate.
  *
  * The rewrite only fires when the join has no equi-join conjunct (if
  * one exists, Spark already hash-partitions on it and the spatial
  * predicate is a cheap residual filter).
  *
  * Config: `spark.graft.spatialJoin.cellSize` (double; unset/<=0 → the
- * cell size is estimated at run time by one scalar subquery over a
- * random sample of both sides — never via a plan-time collect).
+ * grid's cell size is estimated at run time by one scalar subquery over
+ * a random sample of both sides — never via a plan-time collect).
  */
 case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -70,47 +80,67 @@ case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
               }
               ("st_dwithin", a, b, dv)
           }
-          val swapped = refsOnly(l, right)
-          val (lExpr, rExpr) = if (swapped) (r, l) else (l, r)
-          // st_within/contains/coveredby/covers are asymmetric: keep
-          // orientation by mapping to the swapped predicate
-          val pred = if (!swapped) name else name match {
-            case "st_within" => "st_contains"
-            case "st_contains" => "st_within"
-            case "st_coveredby" => "st_covers"
-            case "st_covers" => "st_coveredby"
-            case "st_containsproperly" => "st_within" // conservative: exact filter below re-checks
-            case sym => sym
-          }
           val rest = cs.patch(spatialIdx, Nil, 1)
           val cellSize = spark.conf.get("spark.graft.spatialJoin.cellSize", "0").toDouble
-          val leftDf = ColumnShim.ofRows(spark, left)
-          val rightDf = ColumnShim.ofRows(spark, right)
-          // with no configured cell size the estimate is a scalar
-          // subquery computed at execution: a Spark job inside logical
-          // optimization would block planning at scale
-          val joined = SpatialJoin.join(
-            leftDf, rightDf,
-            ColumnShim.column(lExpr), ColumnShim.column(rExpr),
-            if (pred == "st_containsproperly") "st_intersects" else pred,
-            cellSize = cellSize, distance = dist)
-          val exactRecheck: Seq[Expression] =
-            if (name == "st_containsproperly" || pred == "st_containsproperly") Seq(cs(spatialIdx)) else Nil
-          val base = joined.queryExecution.analyzed
-          // the grid join keeps the join's own attributes, so the rest
-          // of the plan and the remaining conjuncts resolve against it
-          require(base.output.map(_.exprId) == j.output.map(_.exprId),
-            s"grid join output ${base.output} != join output ${j.output}")
-          (rest ++ exactRecheck).reduceOption(And) match {
+          val threshold = conf.autoBroadcastJoinThreshold
+          val (lSize, rSize) = (left.stats.sizeInBytes, right.stats.sizeInBytes)
+          val (base, recheck) =
+            if (cellSize <= 0 && threshold >= 0 && lSize.min(rSize) <= threshold) {
+              // the smaller side is the build side; on a tie, the right
+              val buildLeft = lSize < rSize
+              val buildFirst = refsOnly(l, left) == buildLeft
+              val (buildGeom, probeGeom) = if (buildFirst) (l, r) else (r, l)
+              val (probe, build) = if (buildLeft) (right, left) else (left, right)
+              (SpatialIndexJoin(probe, build, name, buildFirst, probeGeom, buildGeom, dist,
+                probeLeft = !buildLeft), Nil)
+            } else gridJoin(j, name, l, r, dist, cellSize, cs(spatialIdx))
+          (rest ++ recheck).reduceOption(And) match {
             case Some(f) => Filter(f, base)
             case None => base
           }
         }
     }
   }
+
+  /** The grid join of `j` on `name(l, r)` and the conjuncts that must
+   *  re-check its answer. */
+  private def gridJoin(j: Join, name: String, l: Expression, r: Expression, dist: Double,
+      cellSize: Double, spatial: Expression): (LogicalPlan, Seq[Expression]) = {
+    val swapped = refsOnly(l, j.right)
+    val (lExpr, rExpr) = if (swapped) (r, l) else (l, r)
+    // st_within/contains/coveredby/covers are asymmetric: keep
+    // orientation by mapping to the swapped predicate
+    val pred = if (!swapped) name else name match {
+      case "st_within" => "st_contains"
+      case "st_contains" => "st_within"
+      case "st_coveredby" => "st_covers"
+      case "st_covers" => "st_coveredby"
+      case "st_containsproperly" => "st_within" // conservative: exact filter below re-checks
+      case sym => sym
+    }
+    val leftDf = ColumnShim.ofRows(spark, j.left)
+    val rightDf = ColumnShim.ofRows(spark, j.right)
+    // with no configured cell size the estimate is a scalar
+    // subquery computed at execution: a Spark job inside logical
+    // optimization would block planning at scale
+    val joined = SpatialJoin.join(
+      leftDf, rightDf,
+      ColumnShim.column(lExpr), ColumnShim.column(rExpr),
+      if (pred == "st_containsproperly") "st_intersects" else pred,
+      cellSize = cellSize, distance = dist)
+    val exactRecheck: Seq[Expression] =
+      if (name == "st_containsproperly" || pred == "st_containsproperly") Seq(spatial) else Nil
+    val base = joined.queryExecution.analyzed
+    // the grid join keeps the join's own attributes, so the rest
+    // of the plan and the remaining conjuncts resolve against it
+    require(base.output.map(_.exprId) == j.output.map(_.exprId),
+      s"grid join output ${base.output} != join output ${j.output}")
+    (base, exactRecheck)
+  }
 }
 
-/** Session extension installer: functions + optimizer rules.
+/** Session extension installer: functions, optimizer rules and the
+ *  spatial-join planner strategy.
  *  Usage: spark.sql.extensions=graft.plans.GraftExtensions
  *  (or `Graft.install(spark)` on an existing session). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -136,5 +166,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(spark => NativeDispatchRule(spark))
     e.injectOptimizerRule(spark => SpatialJoinRule(spark))
     e.injectOptimizerRule(spark => SpatialFilterRule(spark))
+    e.injectPlannerStrategy(_ => SpatialJoinStrategy)
   }
 }

@@ -18,8 +18,9 @@ class SpatialJoinSpec extends SparkSpec {
 
     val grid = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within", cellSize = 2.0)
       .select("pid", "zid").as[(Long, Int)].collect().toSet
-    val bcast = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within", broadcastRight = true)
-      .select("pid", "zid").as[(Long, Int)].collect().toSet
+    val indexed = pts.join(zones, st_within($"pt", $"zone")).select("pid", "zid")
+    val bcast = indexed.as[(Long, Int)].collect().toSet
+    assert(indexJoins(indexed).size == 1, s"no index join:\n${indexed.queryExecution.executedPlan}")
     val brute = pts.crossJoin(zones).filter(st_within($"pt", $"zone"))
       .select("pid", "zid").as[(Long, Int)].collect().toSet
 
@@ -40,8 +41,9 @@ class SpatialJoinSpec extends SparkSpec {
 
     val grid = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within", cellSize = 4.0)
       .select("pid", "zid").as[(Long, Int)].collect().toSet
-    val bcast = SpatialJoin.join(pts, zones, $"pt", $"zone", "st_within", broadcastRight = true)
-      .select("pid", "zid").as[(Long, Int)].collect().toSet
+    val indexed = pts.join(zones, st_within($"pt", $"zone")).select("pid", "zid")
+    val bcast = indexed.as[(Long, Int)].collect().toSet
+    assert(indexJoins(indexed).size == 1, s"no index join:\n${indexed.queryExecution.executedPlan}")
     val brute = octagonBrute
     assert(brute.size > 10000)
     assert(grid == brute, s"grid join mismatch: missing=${(brute -- grid).take(5)} extra=${(grid -- brute).take(5)}")

@@ -18,6 +18,11 @@ class PlanRulesSpec extends SparkSpec {
     try body finally exp.extraOptimizations = prev
   }
 
+  /** The grid path: with the broadcast threshold at -1 no side is small
+   *  enough for the index join. */
+  private def gridOnly[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
   test("SQL spatial join rewrites away from nested-loop and matches brute force") {
     val pts = (0 until 200).map(i => (i.toLong, (i % 20) + 0.5, (i / 20) + 0.5))
       .toDF("pid", "x", "y").withColumn("pt", st_point($"x", $"y")).select("pid", "pt")
@@ -66,7 +71,7 @@ class PlanRulesSpec extends SparkSpec {
     val brute = pts.crossJoin(zones).filter(st_within($"pt", $"zone"))
       .select("pid", "zid").as[(Long, Int)].collect().toSet
 
-    withRules {
+    gridOnly { withRules {
       assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
       // analysis, optimization (where the rewrite runs) and physical
       // planning — none of which may launch a Spark job
@@ -77,12 +82,14 @@ class PlanRulesSpec extends SparkSpec {
       }
       assert(jobs == 0, s"plan-time launched $jobs job(s)")
       val physical = df.queryExecution.executedPlan.toString
-      assert(physical.contains("HashJoin [__lcx") || physical.contains("HashJoin[__lcx"),
-        s"grid equi-join missing:\n${physical.take(3000)}")
+      // with the threshold at -1 Spark plans no broadcast, so the cell
+      // equi-join is a sort-merge join
+      assert(physical.contains("HashJoin [__lcx") || physical.contains("HashJoin[__lcx") ||
+        physical.contains("SortMergeJoin [__lcx"), s"grid equi-join missing:\n${physical.take(3000)}")
       assert(!physical.contains("NestedLoopJoin"), s"nested-loop join planned:\n${physical.take(3000)}")
       // execution (which runs the sample-estimate subquery) is exact
       assert(df.as[(Long, Int)].collect().toSet == brute)
-    }
+    } }
   }
 
   /** (computed, reused) scalar subqueries anywhere in a physical plan,
@@ -125,7 +132,7 @@ class PlanRulesSpec extends SparkSpec {
   test("SQL spatial join over 200 overlapping octagons (> 32 zones per cell) matches brute force") {
     import SpatialJoinSpec.octagonBrute
     octagonViews()
-    withRules {
+    gridOnly { withRules {
       // default settings: the run-time cell-size estimate, as a SQL user gets it
       assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
       val df = spark.sql("SELECT pid, zid FROM oct_pts JOIN oct_zones ON ST_Contains(zone, pt)")
@@ -134,12 +141,12 @@ class PlanRulesSpec extends SparkSpec {
       val got = df.as[(Long, Int)].collect().toSet
       assert(got == octagonBrute,
         s"missing=${(octagonBrute -- got).take(5)} extra=${(got -- octagonBrute).take(5)}")
-    }
+    } }
   }
 
   test("SQL grid join computes its cell size in one subquery; every other reference reuses it") {
     octagonParquetViews
-    withRules {
+    gridOnly { withRules {
       assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
       val df = spark.sql(octagonParquetJoin)
       // collect this Dataset itself, so that its adaptive plan is final
@@ -148,7 +155,7 @@ class PlanRulesSpec extends SparkSpec {
       val (computed, reused) = subqueries(plan)
       assert(computed == 1 && reused >= 1,
         s"$computed computed and $reused reused subqueries:\n${plan.toString.take(4000)}")
-    }
+    } }
   }
 
   test("SQL grid join matches brute force with adaptive execution off") {
@@ -156,7 +163,7 @@ class PlanRulesSpec extends SparkSpec {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try withRules {
+    try gridOnly { withRules {
       assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
       val df = spark.sql(octagonParquetJoin)
       val plan = df.queryExecution.executedPlan
@@ -167,7 +174,7 @@ class PlanRulesSpec extends SparkSpec {
       val got = df.as[(Long, Int)].collect().toSet
       assert(got == SpatialJoinSpec.octagonBrute,
         s"missing=${(SpatialJoinSpec.octagonBrute -- got).take(5)} extra=${(got -- SpatialJoinSpec.octagonBrute).take(5)}")
-    } finally prev match {
+    } } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
@@ -212,7 +219,7 @@ class PlanRulesSpec extends SparkSpec {
     val key = "spark.sql.codegen.fallback"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try withRules {
+    try gridOnly { withRules {
       val df = spark.sql("SELECT pid, zid FROM oct_pts JOIN oct_zones ON ST_Within(pt, zone)")
       // collect this Dataset itself, so that its adaptive plan is final
       assert(df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet == SpatialJoinSpec.octagonBrute)
@@ -221,10 +228,83 @@ class PlanRulesSpec extends SparkSpec {
         s"no grid equi-join:\n${df.queryExecution.executedPlan.toString.take(3000)}")
       assert(joins.forall(_._2),
         s"grid equi-join outside whole-stage codegen:\n${df.queryExecution.executedPlan.toString.take(4000)}")
-    } finally prev match {
+    } } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  /** Registers 200 points `zl_pts(pid, g)` and nine zones `zl_zones(zid, g)`,
+   *  one geometry column name on both sides; returns brute force's
+   *  (pid, zid) pairs. */
+  private def zonesAndPoints(): Set[(Long, Int)] = {
+    val pts = (0 until 200).map(i => (i.toLong, (i % 20) + 0.5, (i / 20) + 0.5))
+      .toDF("pid", "x", "y").withColumn("g", st_point($"x", $"y")).select("pid", "g")
+    val zones = (for (zx <- 0 until 3; zy <- 0 until 3)
+      yield (zx * 3 + zy, zx * 6.0, zy * 3.0, zx * 6.0 + 7.0, zy * 3.0 + 4.0))
+      .toDF("zid", "x0", "y0", "x1", "y1")
+      .withColumn("g", st_makeenvelope($"x0", $"y0", $"x1", $"y1")).select("zid", "g")
+    pts.createOrReplaceTempView("zl_pts")
+    zones.createOrReplaceTempView("zl_zones")
+    pts.as("p").crossJoin(zones.as("z")).filter(st_within($"p.g", $"z.g"))
+      .select("pid", "zid").as[(Long, Int)].collect().toSet
+  }
+
+  for ((side, query) <- Seq(
+      "zones on the join's left" -> "SELECT pid, zid FROM zl_zones zones JOIN zl_pts pts ON ST_Contains(zones.g, pts.g)",
+      "points on the join's left" -> "SELECT pid, zid FROM zl_pts pts JOIN zl_zones zones ON ST_Within(pts.g, zones.g)")) {
+    test(s"$side: the index join builds the zones and matches brute force") {
+      val brute = zonesAndPoints()
+      assert(brute.nonEmpty)
+      val (df, jobs) = jobsDuring {
+        val df = spark.sql(query)
+        df.queryExecution.executedPlan
+        df
+      }
+      assert(jobs == 0, s"plan-time launched $jobs job(s)")
+      assert(df.as[(Long, Int)].collect().toSet == brute)
+      val joins = indexJoins(df)
+      assert(joins.size == 1, s"no index join:\n${df.queryExecution.executedPlan}")
+      assert(joins.head.build.output.map(_.name) == Seq("zid", "g"),
+        s"built ${joins.head.build.output}, not the zones")
+    }
+  }
+
+  test("a small x small spatial join picks the same build side in every planning") {
+    // equal sizes: the tie goes to the join's right side
+    val boxes = (0 until 40).map(i => (i, i * 1.0, 0.0, i * 1.0 + 3.0, 2.0 + (i % 3)))
+      .toDF("id", "x0", "y0", "x1", "y1")
+      .withColumn("g", st_makeenvelope($"x0", $"y0", $"x1", $"y1")).select("id", "g")
+    boxes.select($"id".as("lid"), $"g".as("lg")).createOrReplaceTempView("tie_l")
+    boxes.select($"id".as("rid"), $"g".as("rg")).createOrReplaceTempView("tie_r")
+    def buildSide(): Seq[String] = {
+      val df = spark.sql("SELECT lid, rid FROM tie_l JOIN tie_r ON ST_Intersects(lg, rg)")
+      df.collect()
+      indexJoins(df).map(_.build.output.map(_.name).mkString(","))
+    }
+    val first = buildSide()
+    assert(first == Seq("rid,rg"), s"build side $first")
+    assert((1 to 3).map(_ => buildSide()).forall(_ == first))
+  }
+
+  test("a forced grid join plans no Exchange SinglePartition, its cell-size subquery included") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    octagonParquetViews
+    gridOnly { withRules {
+      assert(spark.conf.getOption("spark.graft.spatialJoin.cellSize").isEmpty)
+      val df = spark.sql(octagonParquetJoin)
+      assert(df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet == SpatialJoinSpec.octagonBrute)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("__lcx"), s"not the grid join:\n${plan.toString.take(3000)}")
+      val (computed, _) = subqueries(plan)
+      assert(computed == 1)
+      val single = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+      }
+      assert(single.isEmpty, s"${single.size} Exchange SinglePartition:\n${plan.toString.take(6000)}")
+    } }
   }
 
   test("self spatial join (a JOIN a) rewrites and matches brute force") {
@@ -244,7 +324,7 @@ class PlanRulesSpec extends SparkSpec {
     val bruteW = l.crossJoin(r).filter(st_within($"lbox", $"rbox"))
       .select("lid", "rid").as[(Int, Int)].collect().toSet
 
-    withRules {
+    gridOnly { withRules {
       spark.conf.set("spark.graft.spatialJoin.cellSize", "3.0")
       try {
         val df = spark.sql(
@@ -272,7 +352,7 @@ class PlanRulesSpec extends SparkSpec {
            FROM boxes_self_pq a JOIN boxes_self_pq b ON ST_Within(a.box, b.box)""")
       assert(dfAuto.queryExecution.optimizedPlan.toString.contains("__lcx"))
       assert(dfAuto.as[(Int, Int)].collect().toSet == bruteW)
-    }
+    } }
   }
 
   test("bbox data-skipping conjuncts reach the parquet scan") {

@@ -50,6 +50,23 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `body` with each SQL conf key set, every key's previous value
+   *  restored afterwards. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The broadcast index joins in a Dataset's executed plan, adaptive
+   *  query stages included. */
+  def indexJoins(df: org.apache.spark.sql.DataFrame): Seq[graft.plans.BroadcastIndexJoinExec] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case j: graft.plans.BroadcastIndexJoinExec => j }
+
   def assertSqlApprox(expr: String, expected: Double, tol: Double): Unit = {
     val got = sql1(expr).asInstanceOf[Double]
     assert(math.abs(got - expected) <= tol, s"$expr -> $got !~ $expected (tol $tol)")
