@@ -3,6 +3,8 @@ package graft
 import graft.functions._
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.graft.ColumnShim
 
 /**
@@ -19,56 +21,17 @@ object Graft {
     "st_covers", "st_coveredby", "st_crosses", "st_disjoint", "st_equals",
     "st_overlaps", "st_touches", "st_intersects_extent")
 
-  /** Register every function into the session (idempotent). */
-  def install(spark: SparkSession): SparkSession = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("st_graft_installed"))) return spark
-    reg.createOrReplaceTempFunction("st_graft_installed", e => org.apache.spark.sql.catalyst.expressions.Literal(true), "scala_udf")
-    GeoOps.ops.keys.foreach { name =>
-      reg.createOrReplaceTempFunction(name, exprs => GeoScalar(name, exprs), "scala_udf")
-    }
-    predicateNames.foreach { name =>
-      reg.createOrReplaceTempFunction(name, exprs => GeoPredicate(name, exprs(0), exprs(1)), "scala_udf")
-    }
+  /** Every SQL function graft registers, by name. [[install]] and
+   *  [[graft.plans.GraftExtensions]] both walk this list. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = {
     // reference-compatible aliases (docs/functions.md)
-    val aliases = Map(
+    val aliases = Seq(
       "st_numpoints" -> "st_npoints",
       "st_numgeometries" -> "st_ngeometries",
       "st_numinteriorrings" -> "st_ninteriorrings",
       "st_makepoint" -> "st_makepoint",
       "st_geomfromhexewkb" -> "st_geomfromhexwkb",
       "st_distance_spheroid_m" -> "st_distance_spheroid")
-    aliases.foreach { case (alias, target) =>
-      reg.createOrReplaceTempFunction(alias, exprs => GeoScalar(target, exprs), "scala_udf")
-    }
-    reg.createOrReplaceTempFunction("st_extent_agg", e => StExtentAgg(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("st_envelope_agg", e => StExtentAgg(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("st_union_agg", e => StUnionAgg(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("st_intersection_agg", e => StIntersectionAgg(e.head), "scala_udf")
-    // pipeline expressions (SQL callers)
-    reg.createOrReplaceTempFunction("simhash", e => SimHash(e.head), "scala_udf")
-    // unicode cleanup (cross-certified vs the oracle engine's ICU impls)
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      e => UnicodeNormalize(e.head, "NFC"), "scala_udf")
-    reg.createOrReplaceTempFunction("unicode_normalize", e =>
-      UnicodeNormalize(e(0),
-        e(1).eval(null).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("strip_accents", e => StripAccents(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("html_to_text", e => HtmlToText(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("url_normalize", e => UrlNormalize(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("doc_fingerprint", e => Fingerprint(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_similarity", e => CosineSimilarity(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_similarity", e => JaroSimilarity(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler_similarity", e => JaroWinklerSimilarity(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("damerau_levenshtein", e => DamerauLevenshtein(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_signature", e => MinHashSignature(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("string_shingles", e => StringShingles(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("topk_by_score", e =>
-      TopKByScore(e(0), e(1), e(2).eval(null).asInstanceOf[Number].intValue), "scala_udf")
-    reg.createOrReplaceTempFunction("top_ngram_fraction", e =>
-      TopNgramFraction(e(0),
-        if (e.length > 1) e(1).eval(null).asInstanceOf[Number].intValue else 2), "scala_udf")
     // native-tier ST_Transform overloads (distinct names: a post-analysis
     // rewrite of st_transform would change output types under resolved
     // parents — see TransformNative scaladoc)
@@ -78,13 +41,49 @@ object Graft {
     }
     def xyArg(e: Seq[Expression]): Boolean =
       e.length <= 3 || e(3).eval(null).asInstanceOf[Boolean]
-    reg.createOrReplaceTempFunction("st_transform_point2d", e =>
-      TransformNative(e(0), strArg(e(1)), strArg(e(2)), xyArg(e), isBox = false), "scala_udf")
-    reg.createOrReplaceTempFunction("st_transform_box2d", e =>
-      TransformNative(e(0), strArg(e(1)), strArg(e(2)), xyArg(e), isBox = true), "scala_udf")
-    // table functions: SELECT * FROM st_read('path') etc. (reference's
-    // replacement-scan sugar, st_read.cpp:598-613)
-    val tfReg = spark.sessionState.tableFunctionRegistry
+    Seq[(String, Seq[Expression] => Expression)](
+      // the marker that makes `install` idempotent
+      "st_graft_installed" -> (_ => org.apache.spark.sql.catalyst.expressions.Literal(true))) ++
+    GeoOps.ops.keys.toSeq.map(name => name -> ((exprs: Seq[Expression]) => GeoScalar(name, exprs))) ++
+    predicateNames.map(name =>
+      name -> ((exprs: Seq[Expression]) => GeoPredicate(name, exprs(0), exprs(1)))) ++
+    aliases.map { case (alias, target) =>
+      alias -> ((exprs: Seq[Expression]) => GeoScalar(target, exprs)) } ++
+    Seq[(String, Seq[Expression] => Expression)](
+      "st_extent_agg" -> (e => StExtentAgg(e.head)),
+      "st_envelope_agg" -> (e => StExtentAgg(e.head)),
+      "st_union_agg" -> (e => StUnionAgg(e.head)),
+      "st_intersection_agg" -> (e => StIntersectionAgg(e.head)),
+      // pipeline expressions (SQL callers)
+      "simhash" -> (e => SimHash(e.head)),
+      // unicode cleanup (cross-certified vs the oracle engine's ICU impls)
+      "nfc_normalize" -> (e => UnicodeNormalize(e.head, "NFC")),
+      "unicode_normalize" -> (e => UnicodeNormalize(e(0),
+        e(1).eval(null).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)),
+      "strip_accents" -> (e => StripAccents(e.head)),
+      "html_to_text" -> (e => HtmlToText(e.head)),
+      "url_normalize" -> (e => UrlNormalize(e.head)),
+      "doc_fingerprint" -> (e => Fingerprint(e.head)),
+      "cosine_similarity" -> (e => CosineSimilarity(e(0), e(1))),
+      "jaro_similarity" -> (e => JaroSimilarity(e(0), e(1))),
+      "jaro_winkler_similarity" -> (e => JaroWinklerSimilarity(e(0), e(1))),
+      "damerau_levenshtein" -> (e => DamerauLevenshtein(e(0), e(1))),
+      "minhash_signature" -> (e => MinHashSignature(e.head)),
+      "string_shingles" -> (e => StringShingles(e.head)),
+      "topk_by_score" -> (e =>
+        TopKByScore(e(0), e(1), e(2).eval(null).asInstanceOf[Number].intValue)),
+      "top_ngram_fraction" -> (e => TopNgramFraction(e(0),
+        if (e.length > 1) e(1).eval(null).asInstanceOf[Number].intValue else 2)),
+      "st_transform_point2d" -> (e =>
+        TransformNative(e(0), strArg(e(1)), strArg(e(2)), xyArg(e), isBox = false)),
+      "st_transform_box2d" -> (e =>
+        TransformNative(e(0), strArg(e(1)), strArg(e(2)), xyArg(e), isBox = true)))
+  }
+
+  /** Every SQL table function graft registers, by name: SELECT * FROM
+   *  st_read('path') etc. (reference's replacement-scan sugar,
+   *  st_read.cpp:598-613). Walked like [[functions]]. */
+  val tableFunctions: Seq[(String, Seq[Expression] => LogicalPlan)] = {
     def litStr(e: Expression): String = e.eval(null) match {
       case s: org.apache.spark.unsafe.types.UTF8String => s.toString
       case other => other.toString
@@ -170,8 +169,8 @@ object Graft {
             .exists(v => v.equalsIgnoreCase("true") || v == "1")))
       }
     }
-    tfReg.createOrReplaceTempFunction("st_read",
-      exprs => {
+    Seq[(String, Seq[Expression] => LogicalPlan)](
+      "st_read" -> (exprs => {
         import graft.sources.GeoRead
         val rest = exprs.tail
         val opts = rest.length match {
@@ -193,23 +192,20 @@ object Graft {
             s"st_read takes (path[, layer][, filter_wkt | x0, y0, x1, y1]); got ${n + 1} args")
         }
         planOf(GeoRead.read(SparkSession.active, litStr(exprs.head), opts))
-      }, "scala_udf")
-    tfReg.createOrReplaceTempFunction("st_drivers",
-      _ => planOf(graft.sources.GeoRead.drivers(SparkSession.active)), "scala_udf")
-    tfReg.createOrReplaceTempFunction("st_read_meta",
-      exprs => planOf(graft.sources.GeoRead.readMeta(SparkSession.active, litStr(exprs.head))), "scala_udf")
-    tfReg.createOrReplaceTempFunction("st_table_stats",
-      exprs => planOf(graft.sources.GeoRead.tableStats(SparkSession.active, litStr(exprs.head),
-        if (exprs.length > 1) litStr(exprs(1)) else "geom")), "scala_udf")
-    tfReg.createOrReplaceTempFunction("st_list_proj_crs",
-      _ => planOf(graft.sources.GeoRead.listProjCrs(SparkSession.active)), "scala_udf")
-    // snapshot read of a commit-logged clustered table:
-    //   st_read_version(path, version)       — version-number time travel
-    //   st_read_version(path, 'timestamp')   — AS OF form: the latest
-    //     version committed at or before the given instant (ISO-8601 or
-    //     'yyyy-MM-dd[ HH:mm:ss]', read as UTC — the session time zone)
-    tfReg.createOrReplaceTempFunction("st_read_version",
-      exprs => planOf {
+      }),
+      "st_drivers" -> (_ => planOf(graft.sources.GeoRead.drivers(SparkSession.active))),
+      "st_read_meta" -> (exprs =>
+        planOf(graft.sources.GeoRead.readMeta(SparkSession.active, litStr(exprs.head)))),
+      "st_table_stats" -> (exprs =>
+        planOf(graft.sources.GeoRead.tableStats(SparkSession.active, litStr(exprs.head),
+          if (exprs.length > 1) litStr(exprs(1)) else "geom"))),
+      "st_list_proj_crs" -> (_ => planOf(graft.sources.GeoRead.listProjCrs(SparkSession.active))),
+      // snapshot read of a commit-logged clustered table:
+      //   st_read_version(path, version)       — version-number time travel
+      //   st_read_version(path, 'timestamp')   — AS OF form: the latest
+      //     version committed at or before the given instant (ISO-8601 or
+      //     'yyyy-MM-dd[ HH:mm:ss]', read as UTC — the session time zone)
+      "st_read_version" -> (exprs => planOf {
         val s = SparkSession.active
         val path = litStr(exprs.head)
         // dispatch on the literal's TYPE, not parseability: a numeric
@@ -226,28 +222,26 @@ object Graft {
           case _ => litNum(arg).toInt
         }
         graft.sources.GeoTableLog.readVersion(s, path, v)
-      }, "scala_udf")
-    // commit history of a logged table: (version, op, n_add, n_remove)
-    tfReg.createOrReplaceTempFunction("st_table_versions",
-      exprs => planOf {
+      }),
+      // commit history of a logged table: (version, op, n_add, n_remove)
+      "st_table_versions" -> (exprs => planOf {
         val s = SparkSession.active
         import s.implicits._
         graft.sources.GeoTableLog.entries(s, litStr(exprs.head))
           .map { case (v, op, add, rm) => (v, op, add.size, rm.size) }
           .toDF("version", "op", "n_add", "n_remove")
-      }, "scala_udf")
-    // row-level change feed of a logged table (Delta-CDF analog):
-    //   st_table_changes(path, from)      — changes from..latest
-    //   st_table_changes(path, from, to)  — inclusive version range
-    // rows = table columns + _change_type + _commit_version.
-    // Same literal-TYPE dispatch as st_read_version: a numeric literal
-    // is a version number; a string literal is a timestamp — `from`
-    // resolves to the first version committed AT OR AFTER it (changes
-    // since), `to` to the latest committed AT OR BEFORE it (snapshot
-    // rule) — so st_table_changes(p, '2026-08-16', '2026-08-17') is
-    // "what changed that day".
-    tfReg.createOrReplaceTempFunction("st_table_changes",
-      exprs => planOf {
+      }),
+      // row-level change feed of a logged table (Delta-CDF analog):
+      //   st_table_changes(path, from)      — changes from..latest
+      //   st_table_changes(path, from, to)  — inclusive version range
+      // rows = table columns + _change_type + _commit_version.
+      // Same literal-TYPE dispatch as st_read_version: a numeric literal
+      // is a version number; a string literal is a timestamp — `from`
+      // resolves to the first version committed AT OR AFTER it (changes
+      // since), `to` to the latest committed AT OR BEFORE it (snapshot
+      // rule) — so st_table_changes(p, '2026-08-16', '2026-08-17') is
+      // "what changed that day".
+      "st_table_changes" -> (exprs => planOf {
         val s = SparkSession.active
         val path = litStr(exprs.head)
         def versionArg(e: org.apache.spark.sql.catalyst.expressions.Expression,
@@ -261,20 +255,34 @@ object Graft {
         val from = versionArg(exprs(1), since = true)
         val to = if (exprs.length > 2) versionArg(exprs(2), since = false) else -1
         graft.sources.GeoTableChanges.readChanges(s, path, from, to)
-      }, "scala_udf")
-    tfReg.createOrReplaceTempFunction("st_readosm",
-      exprs => planOf(graft.sources.OsmPbf.read(SparkSession.active, litStr(exprs.head))), "scala_udf")
-    tfReg.createOrReplaceTempFunction("st_generatepoints",
-      exprs => planOf(graft.sources.GeoRead.generatePoints(SparkSession.active,
-        litNum(exprs(0)), litNum(exprs(1)), litNum(exprs(2)), litNum(exprs(3)),
-        litNum(exprs(4)).toLong,
-        if (exprs.length > 5) litNum(exprs(5)).toLong else 42L)), "scala_udf")
-    // optimizer rules (spatial join rewrite + bbox data skipping) and the
-    // strategy that plans the rewrite's index join; also injectable via
-    // `spark.sql.extensions=graft.plans.GraftExtensions`
-    spark.experimental.extraOptimizations = Seq(
-      graft.plans.NativeDispatchRule(spark),
-      graft.plans.SpatialJoinRule(spark), graft.plans.SpatialFilterRule(spark))
+      }),
+      "st_readosm" -> (exprs =>
+        planOf(graft.sources.OsmPbf.read(SparkSession.active, litStr(exprs.head)))),
+      "st_generatepoints" -> (exprs =>
+        planOf(graft.sources.GeoRead.generatePoints(SparkSession.active,
+          litNum(exprs(0)), litNum(exprs(1)), litNum(exprs(2)), litNum(exprs(3)),
+          litNum(exprs(4)).toLong,
+          if (exprs.length > 5) litNum(exprs(5)).toLong else 42L))))
+  }
+
+  /** graft's optimizer rules: native dispatch, the spatial join
+   *  rewrite and bbox data skipping. */
+  val optimizerRules: Seq[SparkSession => Rule[LogicalPlan]] = Seq(
+    graft.plans.NativeDispatchRule(_), graft.plans.SpatialJoinRule(_),
+    graft.plans.SpatialFilterRule(_))
+
+  /** Register every function, table function, optimizer rule and the
+   *  spatial-join strategy into the session (idempotent). The same
+   *  lists are injected by `spark.sql.extensions=graft.plans.GraftExtensions`.
+   *  A user's own optimizer rules and strategies stay, after graft's. */
+  def install(spark: SparkSession): SparkSession = {
+    val reg = spark.sessionState.functionRegistry
+    if (reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("st_graft_installed"))) return spark
+    functions.foreach { case (name, f) => reg.createOrReplaceTempFunction(name, f, "scala_udf") }
+    val tfReg = spark.sessionState.tableFunctionRegistry
+    tableFunctions.foreach { case (name, f) => tfReg.createOrReplaceTempFunction(name, f, "scala_udf") }
+    spark.experimental.extraOptimizations =
+      optimizerRules.map(_(spark)) ++ spark.experimental.extraOptimizations
     if (!spark.experimental.extraStrategies.contains(graft.plans.SpatialJoinStrategy))
       spark.experimental.extraStrategies =
         graft.plans.SpatialJoinStrategy +: spark.experimental.extraStrategies

@@ -1583,37 +1583,38 @@ object SparkEntry {
     // four-commit history as q_geotable_changes, but the change rows
     // are DELIVERED by a real micro-batch query — certifying that the
     // streaming path reconstructs and attributes every change
-    // identically to the closed-form source recompute.
+    // identically to the closed-form source recompute. It drains twice
+    // (AvailableNow: after v0, then from its checkpoint after v1–v3), so
+    // no batch is planned while a rewrite retires the files it reads.
     "q_geotable_stream_cdf" -> ((s, dir) => {
       load(s, dir, "customer")
       import org.apache.spark.sql.functions._
-      val out = "/tmp/graft_geotable_stream_cdf"
-      val ckpt = "/tmp/graft_geotable_stream_cdf_ckpt"
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(ckpt))
+      val root = java.nio.file.Files.createTempDirectory("graft_geotable_stream_cdf").toFile
+      Runtime.getRuntime.addShutdownHook(
+        new Thread(() => org.apache.hadoop.fs.FileUtil.fullyDelete(root)))
+      val Seq(out, ckpt, sink) = Seq("table", "ckpt", "sink").map(new java.io.File(root, _).toString)
       val ext = (0.0, 0.0, 100.0, 100.0)
       def slice(lo: Int, hi: Int) = s.table("customer")
         .where(col("c_custkey") > lo && col("c_custkey") <= hi)
         .select(col("c_custkey"), col("c_nationkey"), expr(custPt).as("geom"))
-      sources.GeoTable.writeClustered(slice(0, 300), "geom", out, ext, numFiles = 4)
-      sources.GeoTableLog.enable(s, out)                                  // v0
-      s.catalog.dropTempView("graft_gt_cdf")
-      val q = s.readStream.format("geotable").option("path", out)
+      def drain(): Unit = s.readStream.format("geotable").option("path", out)
         .option("readChangeFeed", "true").load()
         .select(col("_change_type"), col("_commit_version"),
           col("c_custkey"), col("c_nationkey"), col("geom_bbox.xmin").as("bx"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("graft_gt_cdf").option("checkpointLocation", ckpt).start()
-      try {
-        q.processAllAvailable()
-        sources.GeoTable.appendClustered(slice(300, 400), "geom", out, ext,
-          numFiles = 1)                                                   // v1
-        sources.GeoTable.deleteWhere(s, "geom", out, col("c_custkey") % 7 === 2) // v2
-        sources.GeoTable.updateWhere(s, "geom", out, col("c_custkey") % 5 === 1,
-          Map("c_nationkey" -> (col("c_nationkey") + lit(50))))           // v3
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table("graft_gt_cdf")
+        .writeStream.format("parquet").option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+      sources.GeoTable.writeClustered(slice(0, 300), "geom", out, ext, numFiles = 4)
+      sources.GeoTableLog.enable(s, out)                                  // v0
+      drain()
+      sources.GeoTable.appendClustered(slice(300, 400), "geom", out, ext,
+        numFiles = 1)                                                     // v1
+      sources.GeoTable.deleteWhere(s, "geom", out, col("c_custkey") % 7 === 2) // v2
+      sources.GeoTable.updateWhere(s, "geom", out, col("c_custkey") % 5 === 1,
+        Map("c_nationkey" -> (col("c_nationkey") + lit(50))))             // v3
+      drain()
+      s.read.parquet(sink)
         .select(col("_change_type").as("ct"), col("_commit_version").as("v"),
           col("c_custkey"), col("c_nationkey").cast("long").as("nk"),
           col("bx").as("x"))
@@ -3004,8 +3005,9 @@ object SparkEntry {
     // GPT-style pack-and-cut sequence packing in deterministic seeded
     // shuffle order: the oracle replays the concatenate-and-cut cumsum
     // over the SAME md5 order — certifying that the distributed
-    // two-pass prefix scan (per-partition sums + broadcast offsets)
-    // equals the single global cumsum it replaces
+    // two-pass prefix scan (per-partition sums, then a running sum from
+    // each partition's offset over the same range shuffle) equals the
+    // single global cumsum it replaces
     "q_doc_pack" -> ((s, dir) => {
       load(s, dir, "documents")
       import org.apache.spark.sql.functions._

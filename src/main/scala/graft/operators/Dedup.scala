@@ -174,26 +174,29 @@ object Dedup {
     // re-parse `text` from the source (the expensive part at scale)
     val sigs = df.select(id.as("__id"), minhashSignature(text, numHashes, shingleSize).as("__sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // banding cached on its join partitioning AND pre-sorted on the
-    // join keys: the self-join's two branches never canonicalize equal
-    // (Generate + alias), so without the cache each branch re-scans the
-    // signature cache AND pays its own 4·|docs|-row exchange;
-    // cached-after-repartition, both branches read the SAME shuffled
-    // blocks and EnsureRequirements inserts no further exchange. The
-    // sortWithinPartitions (r17) makes the cache's outputOrdering
-    // satisfy the sort-merge self-join's requirement, so BOTH SortExec
-    // nodes vanish from the pair join — the ordering is paid once at
-    // cache build instead of twice at the join. Narrow rows (id, band,
-    // bh — 16 bytes), freed with the signature cache the moment the
-    // pair frame is materialized, so the peak-footprint window is one
-    // operator call, not the session.
-    val banded = bandBuckets(sigs, numHashes, bands)
-      .repartition(col("band"), col("bh"))
-      .sortWithinPartitions(col("band"), col("bh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = sortedBands(sigs, numHashes, bands)
     val (pairs, cand) = estPairs(sigs, banded, numHashes)
     materializeThenFree(pairs, sigs, banded, cand)
   }
+
+  /** Banding cached on its join partitioning AND pre-sorted on the
+   *  join keys: the self-join's two branches never canonicalize equal
+   *  (Generate + alias), so without the cache each branch re-scans the
+   *  signature cache AND pays its own 4·|docs|-row exchange;
+   *  cached-after-repartition, both branches read the SAME shuffled
+   *  blocks and EnsureRequirements inserts no further exchange. The
+   *  sortWithinPartitions (r17) makes the cache's outputOrdering
+   *  satisfy the sort-merge self-join's requirement, so BOTH SortExec
+   *  nodes vanish from the pair join — the ordering is paid once at
+   *  cache build instead of twice at the join. Narrow rows (id, band,
+   *  bh — 16 bytes), freed with the signature cache the moment the
+   *  pair frame is materialized, so the peak-footprint window is one
+   *  operator call, not the session. */
+  private def sortedBands(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    bandBuckets(sigs, numHashes, bands)
+      .repartition(col("band"), col("bh"))
+      .sortWithinPartitions(col("band"), col("bh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Materialize the NARROW pair frame, then immediately free the WIDE
    *  signature/shingle/banding caches it was derived from. Waiting for
@@ -258,7 +261,7 @@ object Dedup {
 
   /** Candidate pairs + signature-agreement estimate over a prepared
    *  banding frame. `banded` may be the raw [[bandBuckets]] output or
-   *  a repartition(band, bh)+sortWithinPartitions-persisted copy
+   *  its [[sortedBands]] cache
    *  ([[minhashCandidates]] / [[nearDupPairs]] use the latter so the
    *  self-join's two branches share one exchange and skip both SMJ
    *  sorts). Returns (result, candidate cache) — the DISTINCT pair
@@ -321,11 +324,7 @@ object Dedup {
         stringShingles(text, shingleSize).as("__sh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = both.select(col("__id"), col("__sig"))
-    // same shared-exchange pre-sorted banding cache as minhashCandidates
-    val banded = bandBuckets(sigs, numHashes, bands)
-      .repartition(col("band"), col("bh"))
-      .sortWithinPartitions(col("band"), col("bh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = sortedBands(sigs, numHashes, bands)
     val (estp, cand) = estPairs(sigs, banded, numHashes)
     val verified = estp
       .join(both.select(col("__id").as("id_a"), col("__sh").as("__sha")), "id_a")

@@ -1,8 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Sequence packing for LLM pretraining batches: concatenate the corpus
@@ -14,13 +17,13 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape: the naive formulation is a cumulative sum over ONE
  * global ordering — a single-partition window, the classic driver-
- * funnel mistake at 100 TB. This implementation is the distributed
- * two-pass prefix scan instead: range-partition by the shuffle key
- * (Spark's sort machinery, n-way parallel), per-partition token sums
- * (numPartitions rows to the driver — scalar stats, not data), prefix
- * offsets broadcast back, then a PER-PARTITION window adds the local
- * running sum. Every stage is n-way parallel; the only global object
- * is one long per partition.
+ * funnel mistake at 100 TB. This implementation is a two-pass prefix
+ * scan over one range-partitioned, sorted plan instead: pass 1 sums
+ * each partition's tokens (numPartitions longs to the driver — scalar
+ * stats, not data), pass 2 is a narrow running sum per partition that
+ * starts at its partition's prefix offset. Both passes read the same
+ * RDD, so the second reads the range shuffle's retained map output:
+ * one shuffle, no window, no join, nothing persisted.
  *
  * The assignment is CONTENT-STABLE: `seq_id`/`seq_offset` derive from
  * the md5 shuffle order and token counts alone — not from partition
@@ -45,58 +48,54 @@ object Packing {
    * Assign `seq_id` / `seq_offset` for pack-and-cut at `budget` tokens
    * per sequence. `tokens` is the per-document token count (e.g.
    * [[TextOps.subwordCount]]); ties in the md5 order break by `key`.
+   * A null token count gets null `seq_id`/`seq_offset` and adds no
+   * tokens. Runs pass 1 eagerly; the result is computed by pass 2 on
+   * each action.
    */
   def packSequences(df: DataFrame, key: Column, tokens: Column, budget: Long,
       seed: Long = 0L): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val spark = df.sparkSession
-    val base = df
+    // range partition on the FULL sort key so order ties cannot span a
+    // partition boundary, then sort within — Spark's parallel sort
+    val sorted = df
       .withColumn("__ord", shuffleKey(key, seed))
       .withColumn("__key", key.cast("string"))
       .withColumn("__tok", tokens.cast("long"))
-    // range partition on the FULL sort key so order ties cannot span a
-    // partition boundary, then sort within — Spark's parallel sort
-    val sorted = base
       .repartitionByRange(col("__ord"), col("__key"))
       .sortWithinPartitions("__ord", "__key")
-      .withColumn("__pid", spark_partition_id())
-    sorted.persist()
-    try {
-      // pass 1: per-partition token totals (numPartitions rows — the
-      // declared driver-scalar class, like SpatialJoin's cell stats)
-      val partSums = sorted.groupBy("__pid").agg(sum("__tok").as("__psum"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      var acc = 0L
-      val offsets = partSums.map { case (pid, s) => val o = acc; acc += s; (pid, o) }
-      // explicit Row + schema (not tuple reflection): encoder-free, so
-      // the operator also works under REPL/driver classloaders where
-      // ScalaReflection cannot resolve product types
-      val offSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__pid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("__poff",
-          org.apache.spark.sql.types.LongType)))
-      val offDf = broadcast(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          java.util.Arrays.asList(offsets.map(o =>
-            org.apache.spark.sql.Row(o._1, o._2)): _*)),
-        offSchema))
-      // pass 2: per-partition running sum (parallel window — partitioned
-      // by __pid, never a global single-partition frame)
-      val w = Window.partitionBy("__pid").orderBy("__ord", "__key")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val packed = sorted.join(offDf, "__pid")
-        .withColumn("__gs", col("__poff") + sum("__tok").over(w) - col("__tok"))
-        .withColumn("seq_id", expr(s"__gs DIV ${budget}L"))
-        .withColumn("seq_offset", col("__gs") % budget)
-        .drop("__ord", "__key", "__tok", "__pid", "__poff", "__gs")
-      // materialize before releasing the sorted input (same
-      // persist-discipline as Dedup.materializeThenFree): the result
-      // must not silently recompute the two-pass scan after unpersist
-      val out = packed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      out
-    } finally sorted.unpersist(blocking = false)
+    val rows = sorted.queryExecution.toRdd
+    val tok = sorted.schema.fieldIndex("__tok")
+    // pass 1: one token sum per partition
+    val offsets = rows.mapPartitions { it =>
+      var s = 0L
+      it.foreach(r => if (!r.isNullAt(tok)) s += r.getLong(tok))
+      Iterator.single(s)
+    }.collect().scanLeft(0L)(_ + _)
+    // pass 2: the running sum from the partition's offset. Rows are
+    // reused buffers, so each is projected, never held.
+    val width = sorted.schema.length
+    val outRefs = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, f.nullable)
+    } ++ Seq(BoundReference(width, LongType, nullable = true),
+      BoundReference(width + 1, LongType, nullable = true))
+    val packed = rows.mapPartitionsWithIndex[InternalRow] { (pid, it) =>
+      val project = UnsafeProjection.create(outRefs)
+      val seq = new GenericInternalRow(2)
+      val joined = new JoinedRow(null, seq)
+      var start = offsets(pid)
+      it.map { r =>
+        if (r.isNullAt(tok)) { seq.setNullAt(0); seq.setNullAt(1) }
+        else {
+          seq.setLong(0, start / budget)
+          seq.setLong(1, start % budget)
+          start += r.getLong(tok)
+        }
+        project(joined.withLeft(r))
+      }
+    }
+    ColumnShim.dataFrame(df.sparkSession, packed, StructType(df.schema.fields ++
+      Seq(StructField("seq_id", LongType), StructField("seq_offset", LongType))),
+      isStreaming = false)
   }
 
   /**

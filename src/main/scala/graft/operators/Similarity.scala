@@ -165,10 +165,6 @@ object Similarity {
     df.join(dups, id.cast("long") === col("__dup_id"), "left_anti")
   }
 
-  /** Vector L2 norm (useful for filtering degenerate embeddings). */
-  def l2Norm(vec: Column): Column =
-    sqrt(aggregate(vec, lit(0.0d), (acc, x) => acc + x.cast("double") * x.cast("double")))
-
   /** Symmetric int8 quantization step (max|x|/127; dequantize =
    *  q·scale). At 100 TB the embedding payload dominates storage and
    *  shuffle bytes — int8 cuts both 4×. Pure SQL lambdas, codegen. */

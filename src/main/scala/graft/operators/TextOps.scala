@@ -98,10 +98,6 @@ object TextOps {
   def digitRatio(text: Column): Column =
     ratio(length(text) - length(regexp_replace(text, "[0-9]", "")), length(text))
 
-  /** Fraction of characters that are uppercase. */
-  def upperRatio(text: Column): Column =
-    ratio(length(text) - length(regexp_replace(text, "[A-Z]", "")), length(text))
-
   /** Mean word length. */
   def meanWordLength(text: Column): Column =
     ratio(length(regexp_replace(text, "\\s", "")), tokenCount(text))

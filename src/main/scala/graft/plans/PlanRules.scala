@@ -139,33 +139,23 @@ case class SpatialJoinRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extension installer: functions, optimizer rules and the
- *  spatial-join planner strategy.
+/** Session extension installer: the same functions, table functions,
+ *  optimizer rules and spatial-join planner strategy as `Graft.install`,
+ *  from the same lists.
  *  Usage: spark.sql.extensions=graft.plans.GraftExtensions
  *  (or `Graft.install(spark)` on an existing session). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  import graft.functions._
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    GeoOps.ops.keys.foreach { name =>
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft", name), exprs => GeoScalar(name, exprs)))
+    graft.Graft.functions.foreach { case (name, f) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), f))
     }
-    graft.Graft.predicateNames.foreach { name =>
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft", name), exprs => GeoPredicate(name, exprs(0), exprs(1))))
+    graft.Graft.tableFunctions.foreach { case (name, f) =>
+      e.injectTableFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), f))
     }
-    e.injectFunction((FunctionIdentifier("st_extent_agg"),
-      new ExpressionInfo("graft", "st_extent_agg"), exprs => StExtentAgg(exprs.head)))
-    e.injectFunction((FunctionIdentifier("st_union_agg"),
-      new ExpressionInfo("graft", "st_union_agg"), exprs => StUnionAgg(exprs.head)))
-    e.injectFunction((FunctionIdentifier("st_intersection_agg"),
-      new ExpressionInfo("graft", "st_intersection_agg"), exprs => StIntersectionAgg(exprs.head)))
-    e.injectOptimizerRule(spark => NativeDispatchRule(spark))
-    e.injectOptimizerRule(spark => SpatialJoinRule(spark))
-    e.injectOptimizerRule(spark => SpatialFilterRule(spark))
+    graft.Graft.optimizerRules.foreach(e.injectOptimizerRule)
     e.injectPlannerStrategy(_ => SpatialJoinStrategy)
   }
 }

@@ -659,7 +659,6 @@ object FlatGeobuf {
     def addShort(v: Int): Unit = { prep(2, 0); putShort(v.toShort) }
     def addInt(v: Int): Unit = { prep(4, 0); putInt(v) }
     def addLong(v: Long): Unit = { prep(8, 0); putLong(v) }
-    def addDouble(v: Double): Unit = { prep(8, 0); putLong(java.lang.Double.doubleToLongBits(v)) }
     def addOffset(off: Int): Unit = { prep(4, 0); putInt(offset - off + 4) }
 
     def createString(s: String): Int = {

@@ -239,9 +239,9 @@ class GeoTableSource(spark: SparkSession, base: String,
   }
 
   /** An empty micro-batch with exactly this source's schema. */
-  private def emptyBatch: DataFrame = ColumnShim.streamingDataFrame(spark,
+  private def emptyBatch: DataFrame = ColumnShim.dataFrame(spark,
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      .queryExecution.toRdd, schema)
+      .queryExecution.toRdd, schema, isStreaming = true)
 
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val from = math.max(start.map(versionOf(_) + 1).getOrElse(startVersion), startVersion)
@@ -284,7 +284,7 @@ class GeoTableSource(spark: SparkSession, base: String,
         .map(_.select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*))
         .getOrElse(spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
-      return ColumnShim.streamingDataFrame(spark, batch.queryExecution.toRdd, schema)
+      return ColumnShim.dataFrame(spark, batch.queryExecution.toRdd, schema, isStreaming = true)
     }
     val fileVersions: Seq[(Int, Seq[String])] = inRange.flatMap {
       case (v, "init", add, _) => Some(v -> add)
@@ -322,8 +322,8 @@ class GeoTableSource(spark: SparkSession, base: String,
         } else df
       }
     // getBatch must return a streaming DataFrame with exactly `schema`
-    ColumnShim.streamingDataFrame(spark,
-      batch.queryExecution.toRdd, schema)
+    ColumnShim.dataFrame(spark,
+      batch.queryExecution.toRdd, schema, isStreaming = true)
   }
 
   override def commit(end: OffsetV1): Unit = ()

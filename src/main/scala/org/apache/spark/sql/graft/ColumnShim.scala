@@ -21,13 +21,14 @@ object ColumnShim {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-  /** A DataFrame flagged `isStreaming = true` over already-computed
-   *  InternalRows — what a V1 streaming `Source.getBatch` must return
-   *  (MicroBatchExecution asserts the flag). Same internal entry point
-   *  the built-in file stream source uses. */
-  def streamingDataFrame(spark: org.apache.spark.sql.SparkSession,
-                         rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                         schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+  /** A DataFrame over already-computed InternalRows. With
+   *  `isStreaming = true` it is what a V1 streaming `Source.getBatch`
+   *  must return (MicroBatchExecution asserts the flag); the same
+   *  internal entry point the built-in file stream source uses. */
+  def dataFrame(spark: org.apache.spark.sql.SparkSession,
+                rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                schema: org.apache.spark.sql.types.StructType,
+                isStreaming: Boolean): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = true)
+      .internalCreateDataFrame(rdd, schema, isStreaming)
 }

@@ -24,11 +24,38 @@ class PackingSpec extends SparkSpec {
     }.toMap
   }
 
-  test("packSequences equals the global concatenate-and-cut cumsum") {
-    val got = Packing.packSequences(docs(500), col("id"), col("tok"), budget = 256L, seed = 7L)
+  private def packed(df: org.apache.spark.sql.DataFrame, budget: Long) =
+    Packing.packSequences(df, col("id"), col("tok"), budget, seed = 7L)
       .select("id", "seq_id", "seq_offset").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got == bruteForce(500, 256L))
+
+  test("packSequences equals the global concatenate-and-cut cumsum") {
+    assert(packed(docs(500), 256L) == bruteForce(500, 256L))
+  }
+
+  test("packSequences equals the cumsum with adaptive execution on and off") {
+    for (aqe <- Seq("true", "false"))
+      withConf("spark.sql.adaptive.enabled" -> aqe) {
+        assert(packed(docs(700).repartition(5), 100L) == bruteForce(700, 100L), s"AQE $aqe")
+      }
+  }
+
+  test("an empty input packs to an empty frame with the output schema") {
+    val full = Packing.packSequences(docs(10), col("id"), col("tok"), 64L, seed = 7L)
+    val empty = Packing.packSequences(docs(10).where(col("id") < 0), col("id"), col("tok"),
+      64L, seed = 7L)
+    assert(empty.schema == full.schema)
+    assert(empty.schema.fieldNames.toSeq == Seq("id", "tok", "seq_id", "seq_offset"))
+    assert(empty.collect().isEmpty)
+  }
+
+  test("packSequences and tokenBudgetSample persist nothing") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    assert(Packing.packSequences(docs(300), col("id"), col("tok"), 64L, seed = 7L).count() == 300)
+    assert(sc.getPersistentRDDs.keySet.toSet == before)
+    assert(Packing.tokenBudgetSample(docs(300), col("id"), col("tok"), 640L, seed = 7L).count() > 0)
+    assert(sc.getPersistentRDDs.keySet.toSet == before)
   }
 
   test("assignment is content-stable across input partitioning") {
@@ -50,12 +77,34 @@ class PackingSpec extends SparkSpec {
   }
 
   test("no single-partition global window in the plan") {
-    val out = Packing.packSequences(docs(200).repartition(8), col("id"), col("tok"),
-      budget = 64L, seed = 7L)
-    val plan = out.queryExecution.executedPlan.toString
-    // the window must be partitioned by __pid, never a global
-    // Window with an empty partition spec (single-partition funnel)
-    assert(!plan.contains("SinglePartition"))
+    // what pack executes is the result's RDD lineage: one shuffle, over
+    // more than one partition, whose partitions hold consecutive runs
+    // of the global order (range partitioning), and nothing else
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val out = Packing.packSequences(docs(200), col("id"), col("tok"), budget = 64L, seed = 7L)
+      val rdd = out.queryExecution.toRdd
+      def deps(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.Dependency[_]] =
+        r.dependencies.flatMap(d => d +: deps(d.rdd))
+      val shuffles = deps(rdd).collect { case s: org.apache.spark.ShuffleDependency[_, _, _] => s }
+      assert(shuffles.size == 1, rdd.toDebugString)
+      assert(shuffles.head.partitioner.numPartitions > 1)
+      val starts = rdd.mapPartitions(it => Iterator.single(it.map(r =>
+        r.getLong(2) * 64L + r.getLong(3)).toVector)).collect().filter(_.nonEmpty)
+      assert(starts.length > 1, "the running sum ran in one partition")
+      assert(starts.flatten.toSeq == starts.flatten.toSeq.sorted)
+      for (text <- Seq(rdd.toDebugString, out.queryExecution.executedPlan.toString)) {
+        assert(!text.contains("SinglePartition"), text)
+        assert(!text.contains("Window"), text)
+      }
+    }
+    // adaptive execution, as the benchmark runs it: pack and one
+    // aggregate over its result take at most 5 jobs (range-bound
+    // sample, the shuffle, pass 1; the aggregate's two stages)
+    withConf("spark.sql.shuffle.partitions" -> "8") {
+      val (n, jobs) = jobsDuring(Packing.packSequences(docs(7500), col("id"), col("tok"),
+        budget = 512L, seed = 7L).agg(sum("seq_id")).collect())
+      assert(n.length == 1 && jobs <= 5, s"$jobs jobs")
+    }
   }
 
   test("shuffled is a deterministic total order") {
