@@ -1113,11 +1113,9 @@ object Bench {
         // the rare band-level false candidates from 32-bit shingle-hash
         // birthday collisions, so both engines report EXACTLY the
         // planted pair set (planted pairs have identical signatures)
-        val out = pairs.filter(col("est_jaccard") >= 0.9)
+        pairs.filter(col("est_jaccard") >= 0.9)
           .agg(count(lit(1)), sum(col("id_a") + col("id_b")))
           .collect()(0).getLong(0)
-        pairs.unpersist(blocking = false)
-        out
       }
       // DSIR data selection at amortized scale: the REAL two-pass
       // operator (fit bucket-agg + broadcast-apply + Gumbel top-k) on

@@ -228,7 +228,6 @@ object BenchOne {
             numHashes = 16, bands = 4, shingleSize = 3)
           val out = pairs.filter(col("est_jaccard") >= 0.9)
             .agg(count(lit(1)), sum(col("id_a") + col("id_b"))).collect()(0)
-          pairs.unpersist(blocking = false)
           println(s"  [minhash n=${out.getLong(0)} s=${out.getLong(1)}]")
           out.getLong(0)
         }

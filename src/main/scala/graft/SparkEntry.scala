@@ -44,7 +44,7 @@ object SparkEntry {
   /** A committed test fixture, as an absolute path from the working
    *  directory (sbt runs Verify and the tests from the project root),
    *  so the oracle SQL that Verify writes out names the same file. */
-  private def fixture(rel: String): String =
+  private[graft] def fixture(rel: String): String =
     new java.io.File("src/test/resources", rel).getAbsolutePath
 
   /** Flagship: grid spatial join (points-in-zones) on sf0.001. */

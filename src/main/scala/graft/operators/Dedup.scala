@@ -164,53 +164,24 @@ object Dedup {
    * 20 bytes/row — never the 128-long signatures; signatures re-join
    * by id onto the (small) candidate pair set afterwards.
    *
-   * Returns (id_a, id_b, est_jaccard) with id_a < id_b, one row per pair.
+   * Returns (id_a, id_b, est_jaccard) with id_a < id_b, one row per
+   * pair, as a frame over its own executed plan (see [[overOwnRdd]]).
    */
   def minhashCandidates(
       df: DataFrame, id: Column, text: Column,
       numHashes: Int = 128, bands: Int = 32, shingleSize: Int = 3): DataFrame = {
-    // persist: the signature frame is read by both the banding branch
-    // and the per-pair signature re-join — without it each branch would
-    // re-parse `text` from the source (the expensive part at scale)
     val sigs = df.select(id.as("__id"), minhashSignature(text, numHashes, shingleSize).as("__sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = sortedBands(sigs, numHashes, bands)
-    val (pairs, cand) = estPairs(sigs, banded, numHashes)
-    materializeThenFree(pairs, sigs, banded, cand)
+    overOwnRdd(estPairs(sigs, bandBuckets(sigs, numHashes, bands), numHashes))
   }
 
-  /** Banding cached on its join partitioning AND pre-sorted on the
-   *  join keys: the self-join's two branches never canonicalize equal
-   *  (Generate + alias), so without the cache each branch re-scans the
-   *  signature cache AND pays its own 4·|docs|-row exchange;
-   *  cached-after-repartition, both branches read the SAME shuffled
-   *  blocks and EnsureRequirements inserts no further exchange. The
-   *  sortWithinPartitions (r17) makes the cache's outputOrdering
-   *  satisfy the sort-merge self-join's requirement, so BOTH SortExec
-   *  nodes vanish from the pair join — the ordering is paid once at
-   *  cache build instead of twice at the join. Narrow rows (id, band,
-   *  bh — 16 bytes), freed with the signature cache the moment the
-   *  pair frame is materialized, so the peak-footprint window is one
-   *  operator call, not the session. */
-  private def sortedBands(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    bandBuckets(sigs, numHashes, bands)
-      .repartition(col("band"), col("bh"))
-      .sortWithinPartitions(col("band"), col("bh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** Materialize the NARROW pair frame, then immediately free the WIDE
-   *  signature/shingle/banding caches it was derived from. Waiting for
-   *  Spark's GC-driven ContextCleaner instead leaves dead
-   *  MEMORY_AND_DISK blocks competing with later jobs for executor
-   *  memory in a long-lived session (one dedup call at 10M rows caches
-   *  GiBs of signatures that are never read again once the pairs
-   *  exist). */
-  private def materializeThenFree(pairs: DataFrame, wide: DataFrame*): DataFrame = {
-    val out = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // one action: pairs now live independently of `wide`
-    wide.foreach(_.unpersist(blocking = false))
-    out
-  }
+  /** A frame over `df`'s executed plan's RDD. Nothing is cached: a
+   *  second read reruns only the plan's last stage, over the shuffle
+   *  output Spark retains while the RDD is referenced, instead of
+   *  replanning and rerunning the whole lineage. Under adaptive
+   *  execution, building the RDD runs the plan's shuffle stages. */
+  private def overOwnRdd(df: DataFrame): DataFrame =
+    ColumnShim.dataFrame(df.sparkSession, df.queryExecution.toRdd, df.schema,
+      isStreaming = false)
 
   /** LSH band buckets of a precomputed (`__id`, `__sig`) frame:
    *  (`__id`, band, bh) — ids only, never the signature or text, so the
@@ -248,96 +219,80 @@ object Dedup {
   }
 
   /** Banding + pair join over a precomputed (`__id`, `__sig`) frame —
-   *  lets callers derive signatures once (and persist) for reuse.
-   *  Since r17 the returned frame is MATERIALIZED (persisted, counted)
-   *  because the pair join's strategy is chosen from the candidate
-   *  count; callers may unpersist it when done. */
+   *  lets callers derive signatures once for reuse. Like
+   *  [[minhashCandidates]], the result is a frame over its own
+   *  executed plan; it caches nothing, so there is nothing to free. */
   def minhashCandidatesFromSigs(sigs: DataFrame, numHashes: Int, bands: Int,
-      maxBucketSize: Int = 0): DataFrame = {
-    val (out, cand) = estPairs(sigs,
-      bandBuckets(sigs, numHashes, bands, maxBucketSize), numHashes)
-    materializeThenFree(out, cand)
-  }
+      maxBucketSize: Int = 0): DataFrame =
+    overOwnRdd(estPairs(sigs, bandBuckets(sigs, numHashes, bands, maxBucketSize), numHashes))
 
-  /** Candidate pairs + signature-agreement estimate over a prepared
-   *  banding frame. `banded` may be the raw [[bandBuckets]] output or
-   *  its [[sortedBands]] cache
-   *  ([[minhashCandidates]] / [[nearDupPairs]] use the latter so the
-   *  self-join's two branches share one exchange and skip both SMJ
-   *  sorts). Returns (result, candidate cache) — the DISTINCT pair
-   *  frame is materialized here to pick the signature re-join
-   *  strategy, and the caller frees it after the result exists. */
+  /** Candidate pairs + signature-agreement estimate over a [[bandBuckets]]
+   *  frame. The one action of the MinHash family runs here: the
+   *  DISTINCT pair plan is counted to pick the signature re-join
+   *  strategy, and the re-joins read a frame over that same RDD, so
+   *  they reuse the distinct shuffle's output instead of a cache. */
   private def estPairs(sigs: DataFrame, banded: DataFrame,
-      numHashes: Int): (DataFrame, DataFrame) = {
-    // The self-join stays sort-merge DELIBERATELY: its per-partition
-    // build side is bands·|docs|/partitions rows — a SHUFFLE_HASH hint
-    // here built a ~60 MB hash relation per task and threw
-    // "Can't acquire memory to build hash relation" at 10M docs in an
-    // 8g session (SHJ cannot spill); SMJ over the pre-sorted banding
-    // cache needs no sort at all and spills gracefully if it ever
-    // does. The r16 win on this join is the banding rewrite above
+      numHashes: Int): DataFrame = {
+    // The self-join is sort-merge DELIBERATELY, and hinted so AQE keeps
+    // it so: its per-partition build side is bands·|docs|/partitions
+    // rows — a SHUFFLE_HASH hint here built a ~60 MB hash relation per
+    // task and threw "Can't acquire memory to build hash relation" at
+    // 10M docs in an 8g session (SHJ cannot spill), and a broadcast
+    // relation would stay on the heap for as long as a caller
+    // holds the result (it is in the result's RDD lineage). Both
+    // branches canonicalize equal, so they share one banding exchange.
+    // The r16 win on this join is the banding rewrite above
     // (BandHashes), which took each branch's scan+explode from 12 s to
     // 0.2 s at 10M docs.
-    val pairs = banded.as("a").join(banded.as("b"),
+    val pairPlan = banded.as("a").hint("merge").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // SHUFFLE_HASH on the signature re-joins only when the PAIR-side
     // build provably fits (ADVICE r16): on duplicate-heavy corpora
     // candidate pairs grow quadratically per cluster — and the second
     // join's build rows carry the full __sa signature array — so the
     // same non-spillable-build failure documented above for the
     // self-join would kill these joins where the planner's sort-merge
-    // join spills gracefully. The pair frame is materialized anyway
-    // (it outlives the signature cache), so the count is free; the
-    // per-task build estimate stays under ShjBuildMaxMb or the hints
-    // are dropped.
-    val nCand = pairs.count()
+    // join spills gracefully. The per-task build estimate stays under
+    // ShjBuildMaxMb or the hints are dropped.
+    val nCand = pairPlan.queryExecution.toRdd.count()
+    val pairs = overOwnRdd(pairPlan)
     val parts = math.max(sigs.sparkSession.sessionState.conf.numShufflePartitions, 1)
     val buildMb = nCand.toDouble / parts * (16 + 4.0 * numHashes + 64) / (1 << 20)
     def hinted(df: DataFrame) = if (buildMb < ShjBuildMaxMb) df.hint("shuffle_hash") else df
     val out = hinted(pairs)
       .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
-    val out2 = hinted(out)
+    hinted(out)
       .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
       // size() counts null slots, so filter the agreeing positions
       // explicitly — est = fraction of minhash positions that agree
       .withColumn("est_jaccard",
         expr("size(filter(zip_with(__sa, __sb, (x, y) -> x = y), v -> v)) / cast(size(__sa) AS double)"))
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    (out2, pairs)
   }
 
   /** LSH candidates verified with exact shingle-set Jaccard (recall
-   *  from LSH, precision exact): (id_a, id_b, est_jaccard, jaccard).
+   *  from LSH, precision exact): (id_a, id_b, est_jaccard, jaccard),
+   *  as a frame over its own executed plan.
    *
-   *  One `text` parse per document: signature AND shingle set come out
-   *  of the same persisted projection, so banding, the signature
-   *  re-join, and the exact verify all read derived columns. */
+   *  Nothing is cached: banding, the signature re-joins and the exact
+   *  verify each derive their column from `text` again. */
   def nearDupPairs(
       df: DataFrame, id: Column, text: Column, threshold: Double = 0.8,
       numHashes: Int = 128, bands: Int = 32, shingleSize: Int = 3): DataFrame = {
-    val both = df.select(id.as("__id"),
-        minhashSignature(text, numHashes, shingleSize).as("__sig"),
-        stringShingles(text, shingleSize).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = both.select(col("__id"), col("__sig"))
-    val banded = sortedBands(sigs, numHashes, bands)
-    val (estp, cand) = estPairs(sigs, banded, numHashes)
-    val verified = estp
-      .join(both.select(col("__id").as("id_a"), col("__sh").as("__sha")), "id_a")
-      .join(both.select(col("__id").as("id_b"), col("__sh").as("__shb")), "id_b")
+    val sigs = df.select(id.as("__id"), minhashSignature(text, numHashes, shingleSize).as("__sig"))
+    val shingled = df.select(id.as("__id"), stringShingles(text, shingleSize).as("__sh"))
+    val verified = estPairs(sigs, bandBuckets(sigs, numHashes, bands), numHashes)
+      .join(shingled.select(col("__id").as("id_a"), col("__sh").as("__sha")), "id_a")
+      .join(shingled.select(col("__id").as("id_b"), col("__sh").as("__shb")), "id_b")
       .withColumn("jaccard",
         size(array_intersect(col("__sha"), col("__shb"))).cast("double")
           / size(array_union(col("__sha"), col("__shb"))))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
-    // same explicit-release discipline as minhashCandidates: the WIDE
-    // signature+shingle cache must not outlive pair materialization
-    // (the r3 clustered-write regression was exactly this class of leak)
-    materializeThenFree(verified, both, banded, cand)
+    overOwnRdd(verified)
   }
 
   /** Near-dedup via MinHash-LSH: drop every row whose id appears as
@@ -418,12 +373,14 @@ object Dedup {
       edges = small
       round += 1
     }
-    // converged edge set is a star forest: (node -> component min)
+    // converged edge set is a star forest: (node -> component min).
+    // The count runs the reduceByKey shuffle while `edges` is still
+    // cached; the returned frame then reads that shuffle's retained
+    // output, so `edges` can be freed and nothing stays cached.
     val mapping = edges
       .flatMap { case (u, v) => Iterator((u, v), (v, v)) }
       .reduceByKey(math.min)
       .toDF("id", "cluster")
-      .persist(lvl) // narrow (2 longs per clustered node); freed below
     mapping.count()
     edges.unpersist(blocking = false)
     nodes.select(col("id").cast("long").as("id"))
@@ -509,11 +466,10 @@ object Dedup {
    *  Same ids-only discipline as the minhash path: the blocking join
    *  carries (q, qh, id) — never the signatures — and the signatures
    *  re-join by id onto the (small) distinct pair set for the hamming
-   *  verify. The signature frame is persisted so the text parses once,
-   *  and freed as soon as the verified pairs are materialized. */
+   *  verify. The result is a plain lazy plan: it caches nothing and
+   *  runs no job until the caller reads it. */
   def simhashCandidates(df: DataFrame, id: Column, text: Column, maxDist: Int = 3): DataFrame = {
     val sigs = df.select(id.as("__id"), simhash(text).as("__sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val blocked = sigs.select(col("__id"),
       explode(expr("transform(sequence(0, 3), q -> named_struct(" +
         "'q', q, 'qh', shiftright(__sig, q * 16) & 65535))")).as("__b"))
@@ -523,13 +479,12 @@ object Dedup {
           col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
       .distinct()
-    val verified = pairs
+    pairs
       .join(sigs.select(col("__id").as("id_a"), col("__sig").as("sa")), "id_a")
       .join(sigs.select(col("__id").as("id_b"), col("__sig").as("sb")), "id_b")
       .withColumn("hamming", hammingDistance(col("sa"), col("sb")))
       .filter(col("hamming") <= maxDist)
       .select("id_a", "id_b", "hamming")
-    materializeThenFree(verified, sigs)
   }
 
   /** Rolling-hash document fingerprint column. */

@@ -15,11 +15,13 @@ class CoverageSpec extends SparkSpec {
   // bytes) and identical to UTF-8 on the ASCII function names we match
   private implicit val codec: scala.io.Codec = scala.io.Codec.ISO8859
 
-  // sbt runs tests with the project root as cwd; fall back to the
-  // canonical checkout path only if the doc isn't beside us
+  // sbt runs tests with the project root as cwd; a run from anywhere
+  // else fails here rather than checking some other checkout's doc
   private val repoRoot: String = {
     val cwd = new java.io.File(".").getCanonicalFile
-    if (new java.io.File(cwd, "COVERAGE.md").exists) cwd.getPath else "/root/repo"
+    require(new java.io.File(cwd, "COVERAGE.md").isFile,
+      s"COVERAGE.md not found in the working directory $cwd; run the suite from the project root")
+    cwd.getPath
   }
 
   // the reference's function index, pinned as one name a line (its

@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 
 class GpxKmlSpec extends SparkSpec {
 
-  private val gpxPath = "/root/repo/src/test/resources/gpx/sample.gpx"
-  private val kmlPath = "/root/repo/src/test/resources/kml/sample.kml"
+  private val gpxPath = SparkEntry.fixture("gpx/sample.gpx")
+  private val kmlPath = SparkEntry.fixture("kml/sample.kml")
 
   test("kmz: doc.kml is preferred over overlay entries; inner selection works") {
-    val kmzPath = "/root/repo/src/test/resources/kml/sample.kmz"
+    val kmzPath = SparkEntry.fixture("kml/sample.kmz")
     // root read = the doc.kml rows, identical to reading the raw kml
     val viaKmz = GeoRead.read(spark, kmzPath)
       .select("folder", "name").collect().map(r => (r.getString(0), r.getString(1))).sorted
@@ -118,7 +118,7 @@ class GpxKmlSpec extends SparkSpec {
     assert(GeoRead.read(spark, tmp.toString).count() == 6) // 2x waypoints
   }
 
-  private val gmlPath = "/root/repo/src/test/resources/gml/sample.gml"
+  private val gmlPath = SparkEntry.fixture("gml/sample.gml")
 
   test("gml: feature members, gml2/gml3 geometry forms, srs, props, Z") {
     import org.apache.spark.sql.functions._

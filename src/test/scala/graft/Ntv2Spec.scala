@@ -8,8 +8,8 @@ import graft.functions.{Crs, Ntv2}
   * fallback contract when no grid directory is configured. */
 class Ntv2Spec extends AnyFunSuite {
 
-  private val le = "/root/repo/src/test/resources/ntv2/synthetic.gsb"
-  private val be = "/root/repo/src/test/resources/ntv2_be/synthetic_be.gsb"
+  private val le = SparkEntry.fixture("ntv2/synthetic.gsb")
+  private val be = SparkEntry.fixture("ntv2_be/synthetic_be.gsb")
 
   test("little- and big-endian twins parse to identical grids") {
     val a = Ntv2.parse(le)
@@ -63,7 +63,7 @@ class Ntv2Spec extends AnyFunSuite {
     // the output differs from identity but is within ~0.01 deg
     val (hLon, hLat) = sys.inverse(-75.1234, 41.2050)
     assert(math.abs(hLon - -75.1234) > 1e-7 && math.abs(hLon - -75.1234) < 0.01)
-    spark.conf.set("spark.graft.crs.gridDir", "/root/repo/src/test/resources/ntv2")
+    spark.conf.set("spark.graft.crs.gridDir", SparkEntry.fixture("ntv2"))
     val (gLon, gLat) = sys.inverse(-75.1234, 41.2050)
     // grid shift applies the synthetic surface, not the Helmert one
     assert(gLon != hLon || gLat != hLat)
@@ -79,7 +79,7 @@ class Ntv2Spec extends AnyFunSuite {
 
   test("NAD27 UTM zone 18N roundtrips through the grid") {
     val spark = Graft.session("local[2]", 2)
-    spark.conf.set("spark.graft.crs.gridDir", "/root/repo/src/test/resources/ntv2")
+    spark.conf.set("spark.graft.crs.gridDir", SparkEntry.fixture("ntv2"))
     try {
       val sys = Crs.resolve("EPSG:26718")
       val (x, y) = sys.forward(-75.1234, 41.2050)

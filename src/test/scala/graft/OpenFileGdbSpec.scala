@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * of the published FGDB table spec; the golden CSV is the oracle
   * for q_src_gdb). */
 class OpenFileGdbSpec extends SparkSpec {
-  private val dir = "/root/repo/src/test/resources/filegdb/sample.gdb"
+  private val dir = SparkEntry.fixture("filegdb/sample.gdb")
 
   test("catalog: user layers discovered via GDB_SystemCatalog") {
     assert(graft.sources.OpenFileGdb.layers(dir) ==

@@ -500,7 +500,6 @@ class DedupSpec extends SparkSpec {
       (3L, "completely different content about spark query engines at scale")
     ).toDF("id", "text")
     val out = Dedup.simhashCandidates(df, $"id", $"text", maxDist = 6)
-    out.unpersist(blocking = true) // bypass the cache so the raw plan shows
     val plan = spark.sessionState.executePlan(out.queryExecution.logical).optimizedPlan
     val blocking = plan.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join
@@ -520,9 +519,6 @@ class DedupSpec extends SparkSpec {
     val dups = base.filter($"doc_id" < 5)
       .select(($"doc_id" + 100000).as("doc_id"), concat($"text", lit(" xyz")).as("text"))
     val all = base.unionAll(dups)
-    val pairs = Dedup.minhashCandidates(all, $"doc_id", $"text", numHashes = 64, bands = 16)
-      .filter($"est_jaccard" >= 0.7)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     // ground truth: brute-force exact word-shingle jaccard over all pairs
     val truth = all.as("a").crossJoin(all.as("b"))
       .filter($"a.doc_id" < $"b.doc_id")
@@ -531,12 +527,17 @@ class DedupSpec extends SparkSpec {
       .select($"a.doc_id", $"b.doc_id").as[(Long, Long)].collect().toSet
     // every planted pair is in the truth set and found by LSH
     for (i <- 0L until 5L) assert(truth.contains((i, i + 100000)))
-    assert(pairs == truth, s"missing=${truth -- pairs} spurious=${pairs -- truth}")
-    val kept = Dedup.minhashDedup(all, $"doc_id", $"text", threshold = 0.7,
-      numHashes = 64, bands = 16)
     val expectedDropped = truth.map(_._2)
-    assert(kept.count() == all.count() - expectedDropped.size)
-    assert(kept.filter($"doc_id".isin(expectedDropped.toSeq: _*)).count() == 0)
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled" -> aqe) {
+      val pairs = Dedup.minhashCandidates(all, $"doc_id", $"text", numHashes = 64, bands = 16)
+        .filter($"est_jaccard" >= 0.7)
+        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+      assert(pairs == truth, s"AQE $aqe: missing=${truth -- pairs} spurious=${pairs -- truth}")
+      val kept = Dedup.minhashDedup(all, $"doc_id", $"text", threshold = 0.7,
+        numHashes = 64, bands = 16)
+      assert(kept.count() == all.count() - expectedDropped.size, s"AQE $aqe")
+      assert(kept.filter($"doc_id".isin(expectedDropped.toSeq: _*)).count() == 0, s"AQE $aqe")
+    }
   }
 
   test("simhash hamming + candidates") {
@@ -604,10 +605,12 @@ class DedupSpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val want = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-      val got = Dedup.duplicateClusters(
-        (0L until n.toLong).toDF("id"), edges.toDF("id_a", "id_b"))
-        .as[(Long, Long)].collect().toMap
-      assert(got == want, s"trial $trial: ${got.toSet -- want.toSet}")
+      for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled" -> aqe) {
+        val got = Dedup.duplicateClusters(
+          (0L until n.toLong).toDF("id"), edges.toDF("id_a", "id_b"))
+          .as[(Long, Long)].collect().toMap
+        assert(got == want, s"trial $trial, AQE $aqe: ${got.toSet -- want.toSet}")
+      }
     }
   }
 
@@ -621,16 +624,18 @@ class DedupSpec extends SparkSpec {
     val c = base                               // near both; a~b only 0.8
     val df = Seq((1L, a), (2L, b), (3L, c),
       (10L, "completely different text about nothing in particular at all")).toDF("id", "text")
-    val pairs = Dedup.nearDupPairs(df, $"id", $"text", threshold = 0.85,
-      numHashes = 64, bands = 16).select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 3L), (2L, 3L)), s"pairs=$pairs")
-    val greedy = Dedup.minhashDedup(df, $"id", $"text", threshold = 0.85,
-      numHashes = 64, bands = 16).select("id").as[Long].collect().toSet
-    assert(greedy == Set(1L, 2L, 10L)) // two reps of one cluster
-    val kept = Dedup.clusterDedup(df, $"id", $"text", threshold = 0.85,
-      numHashes = 64, bands = 16)
-      .select("id").as[Long].collect().toSet
-    assert(kept == Set(1L, 10L), s"kept=$kept")
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled" -> aqe) {
+      val pairs = Dedup.nearDupPairs(df, $"id", $"text", threshold = 0.85,
+        numHashes = 64, bands = 16).select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(pairs == Set((1L, 3L), (2L, 3L)), s"AQE $aqe: pairs=$pairs")
+      val greedy = Dedup.minhashDedup(df, $"id", $"text", threshold = 0.85,
+        numHashes = 64, bands = 16).select("id").as[Long].collect().toSet
+      assert(greedy == Set(1L, 2L, 10L), s"AQE $aqe") // two reps of one cluster
+      val kept = Dedup.clusterDedup(df, $"id", $"text", threshold = 0.85,
+        numHashes = 64, bands = 16)
+        .select("id").as[Long].collect().toSet
+      assert(kept == Set(1L, 10L), s"AQE $aqe: kept=$kept")
+    }
   }
 
   test("duplicateClusters: large-star/small-star CC equals brute-force components") {
@@ -639,22 +644,54 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (3L, 2L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L), (21L, 20L))
       .toDF("id_a", "id_b")
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L, 21L, 30L, 31L).toDF("id")
-    val got = Dedup.duplicateClusters(nodes, pairs)
-      .as[(Long, Long)].collect().toMap
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 31L)
-    assert(got == want)
-    // a long path (worst case for label propagation) still converges
     val path = (0L until 64L).sliding(2).map(w => (w(0), w(1))).toSeq.toDF("id_a", "id_b")
     val pathNodes = (0L until 64L).toDF("id")
-    val clustered = Dedup.duplicateClusters(pathNodes, path).as[(Long, Long)].collect()
-    assert(clustered.forall(_._2 == 0L), clustered.filter(_._2 != 0L).take(5).mkString(","))
-    // empty pair set -> all singletons
-    val none = Dedup.duplicateClusters(nodes, pairs.filter(lit(false)))
-      .as[(Long, Long)].collect()
-    assert(none.forall(p => p._1 == p._2))
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled" -> aqe) {
+      val got = Dedup.duplicateClusters(nodes, pairs)
+        .as[(Long, Long)].collect().toMap
+      assert(got == want, s"AQE $aqe")
+      // a long path (worst case for label propagation) still converges
+      val clustered = Dedup.duplicateClusters(pathNodes, path).as[(Long, Long)].collect()
+      assert(clustered.forall(_._2 == 0L), clustered.filter(_._2 != 0L).take(5).mkString(","))
+      // empty pair set -> all singletons
+      val none = Dedup.duplicateClusters(nodes, pairs.filter(lit(false)))
+        .as[(Long, Long)].collect()
+      assert(none.forall(p => p._1 == p._2), s"AQE $aqe")
+    }
   }
 
+  test("the LSH family and duplicateClusters leave no cached RDD behind") {
+    val sc = spark.sparkContext
+    val df = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "the quick brown fox jumps over the lazy dog again and again!"),
+      (3L, "completely different content about spark query engines at scale"),
+      (4L, "completely different content about spark query engines at scale today")
+    ).toDF("id", "text")
+    val sigs = df.select($"id".as("__id"), Dedup.minhashSignature($"text", 16, 3).as("__sig"))
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashCandidates" -> (() => Dedup.minhashCandidates(df, $"id", $"text", 16, 4, 3)),
+      "minhashCandidatesFromSigs" -> (() => Dedup.minhashCandidatesFromSigs(sigs, 16, 4)),
+      "minhashCandidatesFromSigs capped" ->
+        (() => Dedup.minhashCandidatesFromSigs(sigs, 16, 4, maxBucketSize = 1)),
+      "nearDupPairs" -> (() => Dedup.nearDupPairs(df, $"id", $"text", 0.5, 16, 4, 3)),
+      // its own threshold: a cache of nearDupPairs' plan would otherwise be shared, hiding a leak
+      "minhashDedup" -> (() => Dedup.minhashDedup(df, $"id", $"text", 0.6, 16, 4, 3)),
+      "simhashCandidates" -> (() => Dedup.simhashCandidates(df, $"id", $"text", 6)),
+      "duplicateClusters" -> (() => Dedup.duplicateClusters(df.select("id"),
+        Seq((1L, 2L), (3L, 4L), (2L, 4L)).toDF("id_a", "id_b"))))
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled" -> aqe) {
+      for ((name, call) <- calls) {
+        val before = sc.getPersistentRDDs.keySet.toSet
+        val out = call()
+        assert(sc.getPersistentRDDs.keySet.toSet == before, s"$name, AQE $aqe: cached by the call")
+        out.collect()
+        assert(sc.getPersistentRDDs.keySet.toSet == before, s"$name, AQE $aqe: cached by a read")
+      }
+    }
+  }
 }
 
 class DedupPipelineSpec extends SparkSpec {
@@ -2760,7 +2797,7 @@ class KmvSpec extends SparkSpec {
 class DxfSpec extends SparkSpec {
   import graft.sources.Dxf
 
-  private val fixture = "/root/repo/src/test/resources/dxf/sample.dxf"
+  private val fixture = SparkEntry.fixture("dxf/sample.dxf")
 
   test("dxf: entity kinds, attributes, closed-polyline and circle/arc mapping") {
     val es = Dxf.parseEntities(fixture)
@@ -2890,11 +2927,11 @@ class GmtSpec extends SparkSpec {
   import graft.sources.Gmt
 
   test("gmt: header, @D quoting, hole assembly, continuation segments") {
-    val h = Gmt.readHeader("/root/repo/src/test/resources/gmt/mpoly.gmt")
+    val h = Gmt.readHeader(SparkEntry.fixture("gmt/mpoly.gmt"))
     assert(h.gtype == "MULTIPOLYGON" && h.fields == Seq(("name", "string"), ("id", "integer")))
     assert(Gmt.splitD("\"a|b\"|3|\"say \"\"hi\"\"\"") == Seq("a|b", "3", "say \"hi\""))
     graft.Graft.install(spark)
-    val df = graft.sources.GeoRead.read(spark, "/root/repo/src/test/resources/gmt/mpoly.gmt")
+    val df = graft.sources.GeoRead.read(spark, SparkEntry.fixture("gmt/mpoly.gmt"))
     val rows = df.selectExpr("name", "id", "ST_GeometryType(geom)", "ST_NPoints(geom)",
         "ST_Area(geom)").orderBy("id").collect()
     assert(rows.length == 2)

@@ -41,9 +41,8 @@ object Probe {
             "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
         // warm
         locally {
-          val p = graft.operators.Dedup.minhashCandidates(docs(1000000L), col("id"), col("text"), 16, 4, 3)
-          p.filter(col("est_jaccard") >= 0.9).agg(count(lit(1))).collect()
-          p.unpersist(blocking = false)
+          graft.operators.Dedup.minhashCandidates(docs(1000000L), col("id"), col("text"), 16, 4, 3)
+            .filter(col("est_jaccard") >= 0.9).agg(count(lit(1))).collect()
           ()
         }
         (1 to 2).foreach { trial =>
@@ -86,13 +85,10 @@ object Probe {
             "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
             "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
             "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        def run(m: Long): Long = {
-          val pairs = graft.operators.Dedup.minhashCandidates(docs(m), col("id"), col("text"), 16, 4, 3)
-          val out = pairs.filter(col("est_jaccard") >= 0.9)
+        def run(m: Long): Long =
+          graft.operators.Dedup.minhashCandidates(docs(m), col("id"), col("text"), 16, 4, 3)
+            .filter(col("est_jaccard") >= 0.9)
             .agg(count(lit(1)), sum(col("id_a") + col("id_b"))).collect()(0).getLong(0)
-          pairs.unpersist(blocking = false)
-          out
-        }
         run(1000000L)
         (1 to 3).foreach { t => time(s"minhash_real n=$n trial $t") { run(n) } }
 
@@ -245,43 +241,6 @@ object Probe {
           .agg(count(lit(1)), sum(col("id_a") + col("id_b")))
         out.collect()
         println(out.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-
-      case "minhash_plan_r17" =>
-        // the r17 operator shape: pre-sorted banding cache + gated SHJ
-        // re-joins — prints the executed pair-join plan (the sorts
-        // above the InMemoryTableScans must be GONE)
-        val docs = spark.range(10000000L)
-          .selectExpr("id", "CASE WHEN (id DIV 2) % 5 = 0 THEN id DIV 2 ELSE 10000000 + id END AS base")
-          .selectExpr("id",
-            "concat('w', base*7 % 1000000007, ' w', (base*11+1) % 1000000007, " +
-            "' w', (base*13+2) % 1000000007, ' w', (base*17+3) % 1000000007, " +
-            "' w', (base*19+4) % 1000000007, ' w', (base*23+5) % 1000000007) AS text")
-        val sigs = docs.select(col("id").as("__id"),
-          graft.operators.Dedup.minhashSignature(col("text"), 16, 3).as("__sig"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        sigs.count()
-        val banded = graft.operators.Dedup.bandBuckets(sigs, 16, 4)
-          .repartition(col("band"), col("bh"))
-          .sortWithinPartitions(col("band"), col("bh"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        banded.count()
-        val cand = banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.__id") < col("b.__id"))
-          .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-          .distinct()
-        time("pair join over sorted cache") { cand.count() }
-        println(cand.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-        val full = cand.hint("shuffle_hash")
-          .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
-          .hint("shuffle_hash")
-          .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
-          .withColumn("est_jaccard",
-            expr("size(filter(zip_with(__sa, __sb, (x, y) -> x = y), v -> v)) / cast(size(__sa) AS double)"))
-          .filter(col("est_jaccard") >= 0.9)
-          .agg(count(lit(1)), sum(col("id_a") + col("id_b")))
-        time("full est pipeline") { full.collect()(0).getLong(0) }
-        println(full.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
 
       case "spatial_phases" =>
         val n = args.lift(1).map(_.toLong).getOrElse(10000000L)

@@ -301,7 +301,7 @@ class SourcesSpec extends SparkSpec {
           'keep_wkb=true, max_batch_size=100')""").collect()(0).getLong(0)
     assert(filtered == plain.count())
     // gpkg layer via named option
-    val gpkg = "/root/repo/src/test/resources/sample.gpkg"
+    val gpkg = SparkEntry.fixture("sample.gpkg")
     val lines = spark.sql(s"SELECT count(*) AS n FROM st_read('$gpkg', 'layer=lines')")
       .collect()(0).getLong(0)
     assert(lines == 10)
@@ -357,7 +357,7 @@ class SourcesSpec extends SparkSpec {
     import graft.GeoFunctions._
     import org.apache.spark.sql.functions._
     def wkts(f: String): Map[String, String] =
-      GeoRead.read(spark, s"/root/repo/src/test/resources/esri/$f.json")
+      GeoRead.read(spark, SparkEntry.fixture(s"esri/$f.json"))
         .select(col("properties").getItem("name"), st_astext(col("geom")))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val p = wkts("points")
@@ -374,7 +374,7 @@ class SourcesSpec extends SparkSpec {
     assert(g("gc").startsWith("MULTIPOLYGON"))
     assert(g("gd").startsWith("POLYGON"), s"orphan CCW ring must promote: ${g("gd")}")
     // promoted shell is a valid polygon covering its interior
-    val gdRow = GeoRead.read(spark, "/root/repo/src/test/resources/esri/polygons.json")
+    val gdRow = GeoRead.read(spark, SparkEntry.fixture("esri/polygons.json"))
       .filter(col("properties").getItem("name") === "gd")
       .select(st_isvalid(col("geom")), st_area(col("geom"))).collect()(0)
     assert(gdRow.getBoolean(0) && gdRow.getDouble(1) == 4.0)
@@ -510,7 +510,7 @@ class SourcesSpec extends SparkSpec {
   test("MIF/MID: geometry kinds, hole assembly, quoted MID fields, clear errors") {
     import graft.GeoFunctions._
     import org.apache.spark.sql.functions._
-    val df = GeoRead.read(spark, "/root/repo/src/test/resources/mif/sample.mif",
+    val df = GeoRead.read(spark, SparkEntry.fixture("mif/sample.mif"),
       GeoRead.ReadOptions())
     assert(df.count() == 8)
     val byName = df.select(col("name"), st_astext(col("geom")).as("wkt")).collect()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * (tools/make_spatialite_fixture.py — independent Gaia blob packer;
   * its golden CSV is q_src_spatialite's oracle). */
 class SpatialiteSpec extends SparkSpec {
-  private val path = "/root/repo/src/test/resources/sample.sqlite"
+  private val path = SparkEntry.fixture("sample.sqlite")
 
   test("layers from geometry_columns; attribute and geometry decode") {
     graft.Graft.install(spark)
@@ -57,7 +57,7 @@ class SpatialiteSpec extends SparkSpec {
     // a plain SQLite DB without geometry_columns is refused clearly
     val plain = java.io.File.createTempFile("graft-plain", ".sqlite")
     val gpkgBytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/src/test/resources/sample.gpkg"))
+      java.nio.file.Paths.get(SparkEntry.fixture("sample.gpkg")))
     java.nio.file.Files.write(plain.toPath, gpkgBytes)
     val err2 = intercept[IllegalArgumentException] {
       graft.sources.Spatialite.layers(spark, plain.getPath)

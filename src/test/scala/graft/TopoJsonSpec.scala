@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * (tools/make_topojson_golden.py — independent encode + accounting;
   * its golden CSV is q_src_topojson's oracle). */
 class TopoJsonSpec extends SparkSpec {
-  private val dir = "/root/repo/src/test/resources/topojson/"
+  private val dir = SparkEntry.fixture("topojson") + "/"
 
   test("quantized topology: shared arc, reversal, stitching, transform") {
     graft.Graft.install(spark)
