@@ -3006,7 +3006,7 @@ object SparkEntry {
     // shuffle order: the oracle replays the concatenate-and-cut cumsum
     // over the SAME md5 order — certifying that the distributed
     // two-pass prefix scan (per-partition sums, then a running sum from
-    // each partition's offset over the same range shuffle) equals the
+    // each partition's offset over the same md5-ordered shuffle) equals the
     // single global cumsum it replaces
     "q_doc_pack" -> ((s, dir) => {
       load(s, dir, "documents")

@@ -12,6 +12,15 @@ import org.apache.spark.sql.graft.ColumnShim
  * "blocking equi-join + exact verify" skeleton as [[SpatialJoin]],
  * which is the only join shape that scales on a 1000-executor
  * cluster.
+ *
+ * [[exact]], [[minhashCandidates]], [[minhashCandidatesFromSigs]] and
+ * [[nearDupPairs]] return a frame over their own executed plan's RDD
+ * ([[ColumnShim.overOwnRdd]]), so a pipeline that reads a result more
+ * than once (MinHash over exact's survivors, then pack over them)
+ * reruns only the plan's last stage over retained shuffle output, not
+ * the whole lineage. Nothing is cached. The frames keep the plan's
+ * statistics; the MinHash results carry their counted row count, so a
+ * join against a small candidate set is planned as a broadcast.
  */
 object Dedup {
 
@@ -41,6 +50,12 @@ object Dedup {
    * survivors ≈ distinct documents, which can be billions; the
    * default shuffled semi-join partitions by unique id and scales
    * linearly (the 10M amortized bench row measures that path).
+   *
+   * Returns a frame over its own executed plan (no cache), with the
+   * lazy plan's statistics: a caller that reads it twice (MinHash, then
+   * pack) runs the keep aggregate and its broadcast once. Under
+   * adaptive execution, building the frame runs the keep aggregate and
+   * the semi-join's shuffle stages; without it, the first action does.
    */
   def exact(df: DataFrame, id: Column, text: Column,
       broadcastKeep: Boolean = false): DataFrame = {
@@ -68,7 +83,7 @@ object Dedup {
       .groupBy("__k").agg(min("__id").as("__keep_id"))
       .select("__keep_id")
     val keepSide = if (broadcastKeep) broadcast(keep) else keep
-    df.join(keepSide, id === col("__keep_id"), "left_semi")
+    ColumnShim.overOwnRdd(df.join(keepSide, id === col("__keep_id"), "left_semi"))
   }
 
   /**
@@ -165,23 +180,18 @@ object Dedup {
    * by id onto the (small) candidate pair set afterwards.
    *
    * Returns (id_a, id_b, est_jaccard) with id_a < id_b, one row per
-   * pair, as a frame over its own executed plan (see [[overOwnRdd]]).
+   * pair, as a frame over its own executed plan
+   * ([[ColumnShim.overOwnRdd]]) whose row count is the size gate's
+   * count of distinct pairs: the re-joins are inner joins on unique ids
+   * that all have signatures, so every counted pair is one result row.
    */
   def minhashCandidates(
       df: DataFrame, id: Column, text: Column,
       numHashes: Int = 128, bands: Int = 32, shingleSize: Int = 3): DataFrame = {
     val sigs = df.select(id.as("__id"), minhashSignature(text, numHashes, shingleSize).as("__sig"))
-    overOwnRdd(estPairs(sigs, bandBuckets(sigs, numHashes, bands), numHashes))
+    val (pairs, n) = estPairs(sigs, bandBuckets(sigs, numHashes, bands), numHashes)
+    ColumnShim.overOwnRdd(pairs, Some(n))
   }
-
-  /** A frame over `df`'s executed plan's RDD. Nothing is cached: a
-   *  second read reruns only the plan's last stage, over the shuffle
-   *  output Spark retains while the RDD is referenced, instead of
-   *  replanning and rerunning the whole lineage. Under adaptive
-   *  execution, building the RDD runs the plan's shuffle stages. */
-  private def overOwnRdd(df: DataFrame): DataFrame =
-    ColumnShim.dataFrame(df.sparkSession, df.queryExecution.toRdd, df.schema,
-      isStreaming = false)
 
   /** LSH band buckets of a precomputed (`__id`, `__sig`) frame:
    *  (`__id`, band, bh) — ids only, never the signature or text, so the
@@ -221,18 +231,22 @@ object Dedup {
   /** Banding + pair join over a precomputed (`__id`, `__sig`) frame —
    *  lets callers derive signatures once for reuse. Like
    *  [[minhashCandidates]], the result is a frame over its own
-   *  executed plan; it caches nothing, so there is nothing to free. */
+   *  executed plan carrying its pair count; it caches nothing, so
+   *  there is nothing to free. */
   def minhashCandidatesFromSigs(sigs: DataFrame, numHashes: Int, bands: Int,
-      maxBucketSize: Int = 0): DataFrame =
-    overOwnRdd(estPairs(sigs, bandBuckets(sigs, numHashes, bands, maxBucketSize), numHashes))
+      maxBucketSize: Int = 0): DataFrame = {
+    val (pairs, n) = estPairs(sigs, bandBuckets(sigs, numHashes, bands, maxBucketSize), numHashes)
+    ColumnShim.overOwnRdd(pairs, Some(n))
+  }
 
   /** Candidate pairs + signature-agreement estimate over a [[bandBuckets]]
-   *  frame. The one action of the MinHash family runs here: the
-   *  DISTINCT pair plan is counted to pick the signature re-join
-   *  strategy, and the re-joins read a frame over that same RDD, so
-   *  they reuse the distinct shuffle's output instead of a cache. */
+   *  frame, with the number of distinct candidate pairs. The one action
+   *  of the MinHash family runs here: the DISTINCT pair plan is counted
+   *  to pick the signature re-join strategy, and the re-joins read a
+   *  frame over that same RDD, so they reuse the distinct shuffle's
+   *  output instead of a cache. */
   private def estPairs(sigs: DataFrame, banded: DataFrame,
-      numHashes: Int): DataFrame = {
+      numHashes: Int): (DataFrame, Long) = {
     // The self-join is sort-merge DELIBERATELY, and hinted so AQE keeps
     // it so: its per-partition build side is bands·|docs|/partitions
     // rows — a SHUFFLE_HASH hint here built a ~60 MB hash relation per
@@ -258,19 +272,20 @@ object Dedup {
     // join spills gracefully. The per-task build estimate stays under
     // ShjBuildMaxMb or the hints are dropped.
     val nCand = pairPlan.queryExecution.toRdd.count()
-    val pairs = overOwnRdd(pairPlan)
+    val pairs = ColumnShim.overOwnRdd(pairPlan, Some(nCand))
     val parts = math.max(sigs.sparkSession.sessionState.conf.numShufflePartitions, 1)
     val buildMb = nCand.toDouble / parts * (16 + 4.0 * numHashes + 64) / (1 << 20)
     def hinted(df: DataFrame) = if (buildMb < ShjBuildMaxMb) df.hint("shuffle_hash") else df
     val out = hinted(pairs)
       .join(sigs.select(col("__id").as("id_a"), col("__sig").as("__sa")), "id_a")
-    hinted(out)
+    val est = hinted(out)
       .join(sigs.select(col("__id").as("id_b"), col("__sig").as("__sb")), "id_b")
       // size() counts null slots, so filter the agreeing positions
       // explicitly — est = fraction of minhash positions that agree
       .withColumn("est_jaccard",
         expr("size(filter(zip_with(__sa, __sb, (x, y) -> x = y), v -> v)) / cast(size(__sa) AS double)"))
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
+    (est, nCand)
   }
 
   /** LSH candidates verified with exact shingle-set Jaccard (recall
@@ -284,7 +299,7 @@ object Dedup {
       numHashes: Int = 128, bands: Int = 32, shingleSize: Int = 3): DataFrame = {
     val sigs = df.select(id.as("__id"), minhashSignature(text, numHashes, shingleSize).as("__sig"))
     val shingled = df.select(id.as("__id"), stringShingles(text, shingleSize).as("__sh"))
-    val verified = estPairs(sigs, bandBuckets(sigs, numHashes, bands), numHashes)
+    val verified = estPairs(sigs, bandBuckets(sigs, numHashes, bands), numHashes)._1
       .join(shingled.select(col("__id").as("id_a"), col("__sh").as("__sha")), "id_a")
       .join(shingled.select(col("__id").as("id_b"), col("__sh").as("__shb")), "id_b")
       .withColumn("jaccard",
@@ -292,7 +307,7 @@ object Dedup {
           / size(array_union(col("__sha"), col("__shb"))))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
-    overOwnRdd(verified)
+    ColumnShim.overOwnRdd(verified)
   }
 
   /** Near-dedup via MinHash-LSH: drop every row whose id appears as

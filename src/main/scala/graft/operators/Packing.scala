@@ -18,17 +18,21 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  * Scale shape: the naive formulation is a cumulative sum over ONE
  * global ordering — a single-partition window, the classic driver-
  * funnel mistake at 100 TB. This implementation is a two-pass prefix
- * scan over one range-partitioned, sorted plan instead: pass 1 sums
- * each partition's tokens (numPartitions longs to the driver — scalar
- * stats, not data), pass 2 is a narrow running sum per partition that
- * starts at its partition's prefix offset. Both passes read the same
- * RDD, so the second reads the range shuffle's retained map output:
- * one shuffle, no window, no join, nothing persisted.
+ * scan over one sorted plan instead, whose partitions hold consecutive
+ * runs of the global order: rows go to the partition their md5 key's
+ * leading 32 bits scale to, an id that rises with the key, so no job
+ * samples range bounds (md5 is uniform; the bounds are known). Pass 1
+ * sums each partition's tokens (numPartitions longs to the driver —
+ * scalar stats, not data), pass 2 is a narrow running sum per
+ * partition that starts at its partition's prefix offset. Both passes
+ * read the same RDD, so the second reads the shuffle's retained map
+ * output: one shuffle, no window, no join, nothing persisted.
  *
  * The assignment is CONTENT-STABLE: `seq_id`/`seq_offset` derive from
- * the md5 shuffle order and token counts alone — not from partition
- * boundaries — so re-running on different cluster sizes, partition
- * counts, or engines reproduces byte-identical packing (the same
+ * the md5 shuffle order and token counts alone — cuts depend only on
+ * prefix sums, not on partition boundaries — so re-running on
+ * different cluster sizes, partition counts, or engines reproduces
+ * byte-identical packing (the same
  * property [[Sampling]] guarantees for splits, and why the shuffle
  * key is md5 of seed:key, not `rand()`).
  */
@@ -38,11 +42,6 @@ object Packing {
    *  Content-stable analog of "globally shuffle the corpus". */
   def shuffleKey(key: Column, seed: Long): Column =
     md5(concat_ws(":", lit(seed.toString), key.cast("string")))
-
-  /** Global deterministic shuffle: total order by the seeded key
-   *  (range-partitioned sort — no single-partition funnel). */
-  def shuffled(df: DataFrame, key: Column, seed: Long = 0L): DataFrame =
-    df.orderBy(shuffleKey(key, seed), key)
 
   /**
    * Assign `seq_id` / `seq_offset` for pack-and-cut at `budget` tokens
@@ -55,13 +54,18 @@ object Packing {
   def packSequences(df: DataFrame, key: Column, tokens: Column, budget: Long,
       seed: Long = 0L): DataFrame = {
     require(budget > 0, "budget must be positive")
-    // range partition on the FULL sort key so order ties cannot span a
-    // partition boundary, then sort within — Spark's parallel sort
+    // partition k takes the keys whose leading 32 bits b (the first 8
+    // hex digits of the md5) have floor(b·n / 2^32) = k: the id never
+    // falls as (__ord, __key) rises, and equal keys share one, so each
+    // partition is a consecutive run of the global order. Sorting
+    // within partitions then completes Spark's parallel sort.
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = df
       .withColumn("__ord", shuffleKey(key, seed))
       .withColumn("__key", key.cast("string"))
       .withColumn("__tok", tokens.cast("long"))
-      .repartitionByRange(col("__ord"), col("__key"))
+      .repartitionById(n, shiftright(conv(substring(col("__ord"), 1, 8), 16, 10)
+        .cast("long") * n, 32).cast("int"))
       .sortWithinPartitions("__ord", "__key")
     val rows = sorted.queryExecution.toRdd
     val tok = sorted.schema.fieldIndex("__tok")

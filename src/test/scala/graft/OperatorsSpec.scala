@@ -692,6 +692,76 @@ class DedupSpec extends SparkSpec {
       }
     }
   }
+
+  test("exact and MinHash results keep their statistics; a small anti-join broadcasts them") {
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val df = PlantedCorpus.rows(300, 30, 30, seed = 5L).toDF("id", "text", "ntok", "stage")
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled" -> aqe) {
+      val kept = Dedup.exact(df, $"id", $"text")
+      assert(kept.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        df.queryExecution.optimizedPlan.stats.sizeInBytes, s"AQE $aqe")
+      // the relation claims no partitioning its RDD does not have:
+      // none under AQE (the adaptive wrapper claims none), else the
+      // executed plan's, with the RDD's partition count
+      val rel = kept.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r }.get
+      rel.outputPartitioning match {
+        case _: UnknownPartitioning => assert(aqe == "false" || rel.outputOrdering.isEmpty)
+        case p => assert(aqe == "false" && p.numPartitions == rel.rdd.getNumPartitions, p)
+      }
+      val cands = Dedup.minhashCandidates(kept, $"id", $"text", numHashes = 16, bands = 8)
+      val n = cands.count()
+      assert(n >= 30, s"AQE $aqe: $n candidates")
+      assert(cands.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(n)), s"AQE $aqe")
+      // the planner sees 30-odd pairs, not an RDD of unknown size
+      val probe = spark.range(1000).toDF("id")
+      val anti = probe.join(cands.select($"id_b".as("id")), Seq("id"), "left_anti")
+      val planned = anti.queryExecution.sparkPlan
+      assert(planned.collect { case j: BroadcastHashJoinExec => j }.nonEmpty, s"AQE $aqe: $planned")
+      assert(planned.collect { case j: SortMergeJoinExec => j }.isEmpty, s"AQE $aqe: $planned")
+      val dropped = cands.select("id_b").as[Long].collect().toSet
+      assert(anti.as[Long].collect().toSet == (0L until 1000L).toSet -- dropped, s"AQE $aqe")
+    }
+  }
+}
+
+/** A corpus with planted duplicates, as the corpus_dedup benchmark
+ *  builds it: `originals` documents of 40–100 words from a 20,000-word
+ *  vocabulary, then exact copies and near copies (last word replaced)
+ *  of distinct originals, with ids above every original. Rows are
+ *  (id, text, ntok, stage): stage 2 an original, 1 a near copy, 0 an
+ *  exact copy. */
+object PlantedCorpus {
+  private def word(k: Int): String = {
+    val b = new StringBuilder("w")
+    var v = k
+    do { b += ('a' + v % 26).toChar; v /= 26 } while (v > 0)
+    b.toString
+  }
+
+  def rows(originals: Int, exactCopies: Int, nearCopies: Int,
+      seed: Long): Seq[(Long, String, Int, Int)] = {
+    val r = new java.util.SplittableRandom(seed * 104729 + 3)
+    val texts = Array.fill(originals)(Array.fill(40 + r.nextInt(61))(word(r.nextInt(20000))))
+    val order = (0 until originals).toArray
+    (originals - 1 to 1 by -1).foreach { i =>
+      val j = r.nextInt(i + 1); val t = order(i); order(i) = order(j); order(j) = t
+    }
+    val exact = (0 until exactCopies).map { k =>
+      val w = texts(order(k))
+      ((originals + k).toLong, w.mkString(" "), w.length, 0)
+    }
+    val near = (0 until nearCopies).map { k =>
+      val w = texts(order(exactCopies + k)).clone()
+      var repl = word(r.nextInt(20000))
+      while (repl == w.last) repl = word(r.nextInt(20000))
+      w(w.length - 1) = repl
+      ((originals + exactCopies + k).toLong, w.mkString(" "), w.length, 1)
+    }
+    texts.toSeq.zipWithIndex.map { case (w, i) => (i.toLong, w.mkString(" "), w.length, 2) } ++
+      exact ++ near
+  }
 }
 
 class DedupPipelineSpec extends SparkSpec {
@@ -726,6 +796,87 @@ class DedupPipelineSpec extends SparkSpec {
     val afterSem = Similarity.semanticDedup(withVec, $"doc_id", $"embedding",
       k = 2, iters = 2, threshold = 0.9999)
     assert(afterSem.select("doc_id").as[Long].collect().toSet == Set(0L, 3L))
+  }
+
+  test("exact -> minhashCandidates -> packSequences: brute-force answers, <= 18 jobs, nothing cached") {
+    val (numHashes, bands, verifyAt, budget, seed) = (16, 8, 0.5, 2048L, 1L)
+    val corpus = PlantedCorpus.rows(6000, 750, 750, seed)
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-chain").toString
+    corpus.toDF("id", "text", "ntok", "stage").repartition(4)
+      .write.mode("overwrite").parquet(s"$dir/corpus")
+
+    // brute force: min id per text; then LSH pairs from the same band
+    // hashes, joined and deduplicated locally; then the md5-order cumsum
+    val keepIds = corpus.groupBy(_._2).values.map(_.map(_._1).min).toSet
+    val kept = corpus.filter(r => keepIds(r._1))
+    val sigDf = kept.map(r => (r._1, r._2)).toDF("__id", "text")
+      .select($"__id", Dedup.minhashSignature($"text", numHashes, 3).as("__sig"))
+    val sig = sigDf.as[(Long, Seq[Int])].collect().toMap
+    val truePairs = Dedup.bandBuckets(sigDf, numHashes, bands).as[(Long, Int, Int)].collect()
+      .groupBy(b => (b._2, b._3)).values.toSeq
+      .flatMap(g => for (a <- g.toSeq; b <- g.toSeq if a._1 < b._1) yield (a._1, b._1)).distinct
+      .map { case (a: Long, b: Long) =>
+        (a, b, sig(a).zip(sig(b)).count(p => p._1 == p._2) / numHashes.toDouble) }.toSet
+    val dropped = truePairs.collect { case (_, b, est) if est >= verifyAt => b }
+    val md = java.security.MessageDigest.getInstance("MD5")
+    var acc = 0L
+    val truePack = kept.filterNot(r => dropped(r._1))
+      .sortBy(r => (md.digest(s"$seed:${r._1}".getBytes("UTF-8")).map("%02x".format(_)).mkString,
+        r._1.toString))
+      .map { r => val start = acc; acc += r._3; r._1 -> (start / budget, start % budget) }.toMap
+    assert(dropped.size >= 700, s"${dropped.size} near copies found") // the planted ones
+    assert(truePack.size == 6000 + 750 - dropped.size)
+
+    // the chain, read as the benchmark reads it: each result by its
+    // one aggregate, then handed to the next step
+    def longs(r: org.apache.spark.sql.Row) = (0 until r.length).map(r.getLong)
+    def chain() = {
+      val in = spark.read.parquet(s"$dir/corpus").select("id", "text", "ntok")
+      val exact = Dedup.exact(in, $"id", $"text")
+      val ex = longs(exact.agg(count(lit(1)), sum("id"), sum($"id" * $"id")).head())
+      val cands = Dedup.minhashCandidates(exact, $"id", $"text", numHashes = numHashes, bands = bands)
+      val ok = $"est_jaccard" >= verifyAt
+      val mh = longs(cands.agg(count(lit(1)), sum(when(ok, 1L).otherwise(0L)),
+        sum(when(ok, $"id_a" * 1000003L + $"id_b").otherwise(0L))).head())
+      val survivors = exact.join(cands.where(ok).select($"id_b".as("id")), Seq("id"), "left_anti")
+      val packed = Packing.packSequences(survivors, $"id", $"ntok", budget, seed)
+      val pk = longs(packed.agg(count(lit(1)), sum("seq_id"), sum("seq_offset"),
+        sum($"id" * $"seq_id"), sum($"id" * $"seq_offset"), max("seq_id")).head())
+      (exact, cands, packed, ex ++ mh ++ pk)
+    }
+    val verified = truePairs.filter(_._3 >= verifyAt)
+    val trueAggs = Seq(keepIds.size.toLong, keepIds.sum, keepIds.toSeq.map(i => i * i).sum,
+      truePairs.size.toLong, verified.size.toLong, verified.toSeq.map(p => p._1 * 1000003L + p._2).sum,
+      truePack.size.toLong, truePack.values.map(_._1).sum, truePack.values.map(_._2).sum,
+      truePack.map { case (i, p) => i * p._1 }.sum, truePack.map { case (i, p) => i * p._2 }.sum,
+      truePack.values.map(_._1).max)
+    val sc = spark.sparkContext
+    try {
+      for (aqe <- Seq("true", "false"))
+        withConf("spark.sql.adaptive.enabled" -> aqe, "spark.sql.shuffle.partitions" -> "8") {
+          val before = sc.getPersistentRDDs.keySet.toSet
+          val ((exact, cands, packed, aggs), jobs) = jobsDuring(chain())
+          assert(sc.getPersistentRDDs.keySet.toSet == before, s"AQE $aqe: the chain cached an RDD")
+          if (aqe == "true") assert(jobs <= 18, s"$jobs jobs")
+          assert(aggs == trueAggs, s"AQE $aqe")
+          assert(exact.select("id").as[Long].collect().toSet == keepIds, s"AQE $aqe")
+          assert(cands.as[(Long, Long, Double)].collect().toSet == truePairs, s"AQE $aqe")
+          assert(packed.select("id", "seq_id", "seq_offset").as[(Long, Long, Long)].collect()
+            .map(r => r._1 -> (r._2, r._3)).toMap == truePack, s"AQE $aqe")
+          // the lazy formulation of the same chain: a semi-join on the
+          // min id per text, and the anti-join on the verified pairs
+          val in = spark.read.parquet(s"$dir/corpus").select("id", "text", "ntok")
+          val lazyKept = in.join(in.groupBy("text").agg(min("id").as("__keep")),
+            $"id" === $"__keep", "left_semi")
+          val lazySurvivors = lazyKept.join(
+            cands.where($"est_jaccard" >= verifyAt).select($"id_b".as("id")), Seq("id"), "left_anti")
+          assert(lazySurvivors.select("id").as[Long].collect().toSet == truePack.keySet, s"AQE $aqe")
+        }
+    } finally {
+      val fs = new java.io.File(dir)
+      def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }
+      rm(fs)
+    }
   }
 }
 

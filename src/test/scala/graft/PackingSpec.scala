@@ -76,18 +76,24 @@ class PackingSpec extends SparkSpec {
     assert(seqs.length == (total / 512 + (if (total % 512 == 0) 0 else 1)))
   }
 
+  private def shuffles(rdd: org.apache.spark.rdd.RDD[_]) = {
+    def deps(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.Dependency[_]] =
+      r.dependencies.flatMap(d => d +: deps(d.rdd))
+    deps(rdd).collect { case s: org.apache.spark.ShuffleDependency[_, _, _] => s }
+  }
+
   test("no single-partition global window in the plan") {
     // what pack executes is the result's RDD lineage: one shuffle, over
     // more than one partition, whose partitions hold consecutive runs
-    // of the global order (range partitioning), and nothing else
+    // of the global order (partition ids that rise with the md5 key,
+    // not sampled range bounds), and nothing else
     withConf("spark.sql.adaptive.enabled" -> "false") {
       val out = Packing.packSequences(docs(200), col("id"), col("tok"), budget = 64L, seed = 7L)
       val rdd = out.queryExecution.toRdd
-      def deps(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.Dependency[_]] =
-        r.dependencies.flatMap(d => d +: deps(d.rdd))
-      val shuffles = deps(rdd).collect { case s: org.apache.spark.ShuffleDependency[_, _, _] => s }
-      assert(shuffles.size == 1, rdd.toDebugString)
-      assert(shuffles.head.partitioner.numPartitions > 1)
+      val deps = shuffles(rdd)
+      assert(deps.size == 1, rdd.toDebugString)
+      assert(deps.head.partitioner.numPartitions > 1)
+      assert(!deps.head.partitioner.isInstanceOf[org.apache.spark.RangePartitioner[_, _]])
       val starts = rdd.mapPartitions(it => Iterator.single(it.map(r =>
         r.getLong(2) * 64L + r.getLong(3)).toVector)).collect().filter(_.nonEmpty)
       assert(starts.length > 1, "the running sum ran in one partition")
@@ -98,22 +104,17 @@ class PackingSpec extends SparkSpec {
       }
     }
     // adaptive execution, as the benchmark runs it: pack and one
-    // aggregate over its result take at most 5 jobs (range-bound
-    // sample, the shuffle, pass 1; the aggregate's two stages)
+    // aggregate over its result take at most 4 jobs (the shuffle and
+    // pass 1; the aggregate's two stages), and no job samples bounds
     withConf("spark.sql.shuffle.partitions" -> "8") {
-      val (n, jobs) = jobsDuring(Packing.packSequences(docs(7500), col("id"), col("tok"),
-        budget = 512L, seed = 7L).agg(sum("seq_id")).collect())
-      assert(n.length == 1 && jobs <= 5, s"$jobs jobs")
+      val ((out, n), jobs) = jobsDuring {
+        val o = Packing.packSequences(docs(7500), col("id"), col("tok"), budget = 512L, seed = 7L)
+        (o, o.agg(sum("seq_id")).collect())
+      }
+      assert(n.length == 1 && jobs <= 4, s"$jobs jobs")
+      val deps = shuffles(out.queryExecution.toRdd)
+      assert(deps.size == 1 && !deps.head.partitioner.isInstanceOf[org.apache.spark.RangePartitioner[_, _]],
+        out.queryExecution.toRdd.toDebugString)
     }
-  }
-
-  test("shuffled is a deterministic total order") {
-    val a = Packing.shuffled(docs(100), col("id"), seed = 3L).select("id")
-      .as[Long].collect().toSeq
-    val b = Packing.shuffled(docs(100).repartition(5), col("id"), seed = 3L)
-      .select("id").as[Long].collect().toSeq
-    assert(a == b)
-    assert(a != (1L to 100L)) // actually shuffled
-    assert(a.sorted == (1L to 100L))
   }
 }
